@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedDeque}
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{DamerauLevenshteinDist, DotProductD, JaroWinklerSim, LshBandKeys, Md5Hash60, NfcNormalize, PqCodes1, PqLuts, PqReconErr2, RegExpExtractRef, StripAccents}
 
@@ -147,17 +151,74 @@ object Graft {
     spark
   }
 
-  /** Release every relation the library's operators persisted. Some
-    * operators (Dedup.minhashPairsFor, Dedup.ngramJaccardPairs) persist a
-    * multiply-consumed intermediate; the RETURNED DataFrame is lazy, so the
-    * operator itself can never know when it is safe to unpersist. The
-    * caller owns the lifecycle: run the action, then call this (the driver
-    * mains Verify/Bench do so after each materialized query — without it, a
-    * long-lived session accumulates one cached signature/index relation per
-    * library call).
+  /** Relations graft persisted and has not yet released, newest last.
+    * Keyed by SparkContext, not session: the cache manager is shared by
+    * every `newSession()` child, and Bench releases once on the parent
+    * after its warm pool ran queries on the children.
     */
-  def releaseCaches(spark: SparkSession): Unit =
-    spark.sharedState.cacheManager.clearCache()
+  private val owned = new ConcurrentHashMap[SparkContext, ConcurrentLinkedDeque[DataFrame]]()
+
+  private def ownedBy(sc: SparkContext) = {
+    owned.keySet().removeIf(_.isStopped)
+    owned.computeIfAbsent(sc, _ => new ConcurrentLinkedDeque[DataFrame]())
+  }
+
+  /** Persist a multiply-consumed intermediate and record it for
+    * [[releaseCaches]]. A plan that is already cached when this is called
+    * (by the caller, or by an earlier graft call) is left as it is and
+    * not recorded, so graft never releases a cache it did not create.
+    */
+  def persist(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist()
+      ownedBy(df.sparkSession.sparkContext).add(df)
+    }
+    df
+  }
+
+  /** [[persist]] `df` and materialize it now with one `count()` job,
+    * returning the row count. This runs a job while the caller's
+    * DataFrame is still being built. It is used where two jobs of the
+    * final query would otherwise race to fill the same cold cache: a
+    * broadcast build and its probe, or two exchange map stages the
+    * DAGScheduler submits concurrently, each computing the whole subtree
+    * again. The job carries the description `graft.fill:<site>` (the
+    * caller's description is restored afterwards; the job group is left
+    * alone), so listeners and event logs can attribute fill cost.
+    */
+  def fill(df: DataFrame, site: String): Long = {
+    persist(df)
+    val sc = df.sparkSession.sparkContext
+    val prior = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, s"graft.fill:$site")
+    try df.count()
+    finally sc.setLocalProperty(JobDescription, prior)
+  }
+
+  private val JobDescription = "spark.job.description"
+
+  /** What [[releaseCaches]] would release now, oldest first. */
+  private[graft] def registered(spark: SparkSession): Seq[DataFrame] =
+    ownedBy(spark.sparkContext).toArray(Array.empty[DataFrame]).toSeq
+
+  /** Release every relation graft persisted ([[persist]], [[fill]]) on
+    * this session's SparkContext, and nothing else: a DataFrame the
+    * caller cached stays cached. Operators persist multiply-consumed
+    * intermediates while building the DataFrame they return, and that
+    * DataFrame is lazy, so only the caller knows when they are no longer
+    * needed: run the action, then call this (Verify and Bench do so after
+    * every query). Without it a long-lived session keeps one cached
+    * relation per library call. Newest entries go first, so an entry is
+    * released before the ones it reads, and unpersisting is non-blocking.
+    */
+  def releaseCaches(spark: SparkSession): Unit = {
+    val q = ownedBy(spark.sparkContext)
+    var df = q.pollLast()
+    while (df != null) {
+      df.unpersist(blocking = false)
+      df = q.pollLast()
+    }
+  }
 
   /** Rows of iteration state per shuffle partition under
     * [[withIterShufflePartitions]] — sized so a fixture-scale subgraph

@@ -37,6 +37,9 @@ object PlanDump {
           try fn(spark, sfDir).queryExecution
             .explainString(ExplainMode.fromString("formatted"))
           catch { case e: Throwable => s"ERROR: ${e.getClass.getName}: ${e.getMessage}" }
+          // a subtree persisted while building this query would otherwise
+          // show up as InMemoryTableScan in a later query's plan
+          finally Graft.releaseCaches(spark)
       }
       Files.write(Paths.get(outDir, s"${n}_$suffix.txt"), txt.getBytes("UTF-8"))
       println(s"wrote $n ($suffix): ${txt.length} chars")

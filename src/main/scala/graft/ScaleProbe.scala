@@ -206,6 +206,7 @@ object ScaleProbe {
         .orderBy(desc("ow")).limit(50).select(col("src").as("node"))
       probe("graph", "ppr_top_seeds")(
         graft.operators.Graph.personalizedPagerank(edges, seeds))
+      edges.unpersist()
     }
     // ---- LONG audio clips (r10): the fixture's clips are 40-56 samples;
     // a real corpus carries seconds-long audio. 10 s at 8 kHz = 80,000
@@ -274,6 +275,7 @@ object ScaleProbe {
         f"rows=$nIncoming kept=$kept rate=${nIncoming / wall}%8.1f rows/s " +
         f"per_batch=${wall / nBatches}%6.2fs")
       Graft.releaseCaches(spark)
+      refSigs.unpersist()
     }
     // ---- streaming-gate STATE growth (r11 verdict #6): r11 measured
     // rows/s; at 100 TB the risks are the STATIC index side and the
@@ -365,8 +367,8 @@ object ScaleProbe {
         .select(col("vec_id"),
           expr("transform(embedding, v -> CAST(v AS DOUBLE))").as("e"))
       val n = Tables.embeddings(spark, dir).count()
+      val g = graft.operators.Similarity.knnGraphSized(vecs, n).persist()
       probe("cc", "mutual_knn_cc_sized") {
-        val g = graft.operators.Similarity.knnGraphSized(vecs, n).persist()
         val fwd = g.where(col("q_id") < col("cand_id"))
           .select(col("q_id").as("a"), col("cand_id").as("b"))
         val rev = g.where(col("q_id") > col("cand_id"))
@@ -377,6 +379,7 @@ object ScaleProbe {
             mutual.select(col("a").as("src"), col("b").as("dst")))
           .toDF("vec_id", "component_id")
       }
+      g.unpersist()
     }
     // ---- e2e funnel with the early gates NON-BINDING (r11 task #6): on
     // the raw synth corpus the funnel collapses at its first two stages —

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.fill
 import graft.Tables._
 
 /** Market-basket association mining over lineitem: each order is a basket,
@@ -57,11 +58,8 @@ object Basket {
     // Association rules: top pairs by support with confidence and lift.
     // Ties broken by (item_a, item_b) for a deterministic total order.
     "basket_rules" -> { (s, d) =>
-      val b = basketSets(s, d).persist()
-      // eager fill (see Dedup.prefixJaccardPairs): the itemCnt/nOrders
-      // broadcast subtrees and the pair probe otherwise race to
-      // materialize the cold cache from separate jobs
-      b.count()
+      val b = basketSets(s, d)
+      fill(b, "Basket.basket_rules/b") // read by itemCnt, nOrders and the pair probe
       val itemCnt = b.select(explode(col("items")).as("l_partkey"))
         .groupBy("l_partkey").agg(count(lit(1)).as("cnt"))
       val nOrders = b.agg(count(lit(1)).as("n_orders"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash._
 
@@ -65,7 +66,7 @@ object Clustering {
     val e = embeddings(s, d).select(col("vec_id"), toDouble(col("embedding")).as("x"))
     // Persist the parsed corpus once: every round's assignment job (and
     // the caller's downstream passes) re-reads this frame.
-    val x2 = e.withColumn("xx", dot(col("x"), col("x"))).persist()
+    val x2 = persist(e.withColumn("xx", dot(col("x"), col("x"))))
     // Centroids are O(k·dim) MODEL STATE and live on the DRIVER between
     // rounds — the shape of Spark MLlib's own KMeans, which collects the
     // k·dim center sums every iteration. Per round ONE distributed job
@@ -107,14 +108,12 @@ object Clustering {
     }
     // The returned assignment is the one computed against the PRE-update
     // centroids of the last round (matching the unrolled oracle); persist
-    // it — semdedup/balanced-sample callers consume it 2-3 times, and
-    // those consumers launch as concurrent jobs (broadcast subtree +
-    // probe), so the cache is eagerly filled here (r13 race sweep; the
-    // count is honestly timed inside the calling query). Callers that
-    // only want the centroids (ann_ivf_trained_topk's coarse quantizer)
-    // pass eagerAssign = false and never pay for the assignment.
-    val a = assign.persist()
-    if (eagerAssign) a.count()
+    // it — semdedup/balanced-sample callers consume it 2-3 times from
+    // concurrent jobs, so it is filled here. Callers that only want the
+    // centroids (ann_ivf_trained_topk's coarse quantizer) pass
+    // eagerAssign = false and never pay for the assignment.
+    val a = persist(assign)
+    if (eagerAssign) fill(a, "Clustering.lloyd/assign")
     (a, centsDf)
   }
 

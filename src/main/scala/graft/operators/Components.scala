@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 
 /** Cluster formation over the near-dup pair graph — the step a real dedup
@@ -59,7 +60,7 @@ object Components {
     // contains the edge subtree TWICE, so an expensive source (the minhash
     // pair graph) would be computed twice inside und's one materialization
     val e = edges.toDF("src", "dst").localCheckpoint()
-    val und = e.union(e.select(col("dst"), col("src"))).persist()
+    val und = persist(e.union(e.select(col("dst"), col("src"))))
     // Singleton fast-path: a node touching no edge keeps cc = id forever,
     // so ONLY edge endpoints enter the iteration. Near-dup graphs are
     // sparse — at corpus scale the endpoint set is orders of magnitude
@@ -68,10 +69,10 @@ object Components {
     // end. (und carries both directions, so src alone covers every
     // endpoint; endpoints outside `nodes` join in as nodes — docstring
     // contract.)
-    val endpoints = und.select(col("src").as("id")).distinct().persist()
+    val endpoints = persist(und.select(col("src").as("id")).distinct())
     val singletons = nodes.toDF("id").join(endpoints, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cc"))
-    var labels = endpoints.select(col("id"), col("id").as("cc")).persist()
+    var labels = persist(endpoints.select(col("id"), col("id").as("cc")))
     // Convergence metric: exact (row count, decimal label sum). The node set
     // is fixed after initialization and labels only ever decrease, so the
     // pair is strictly monotone until the fixpoint; comparing the pair (not
@@ -80,10 +81,10 @@ object Components {
       val r = df.agg(count(lit(1)), sum(col("cc").cast(DecimalType(38, 0)))).head
       (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)))
     }
-    // size the per-round shuffles to the SUBGRAPH (und is persisted, so
-    // this count also forces the one materialization every round reuses);
-    // see Graft.withIterShufflePartitions for why AQE can't do this here
-    val undRows = und.count()
+    // size the per-round shuffles to the SUBGRAPH (the count is also the
+    // one materialization of und every round reuses); see
+    // Graft.withIterShufflePartitions for why AQE can't do this here
+    val undRows = fill(und, "Components.connectedComponents/und")
     // the lowered-partition scope covers ONLY the subgraph-sized loop; the
     // node-sized singleton anti-join below runs at session parallelism
     labels = graft.Graft.withIterShufflePartitions(nodes.sparkSession, undRows) {
@@ -95,15 +96,9 @@ object Components {
       // unaliased labels("id") === und("src") is an ambiguous self-join
       val prop = labels.as("l").join(und.as("e"), col("l.id") === col("e.src"))
         .select(col("e.dst").as("id"), col("l.cc").as("cc"))
-      val m = labels.union(prop).groupBy("id").agg(min("cc").as("cc")).persist()
-      // Eager fill (r13; the STAGE-parallel variant of the r12 broadcast
-      // cold-cache race): the jump self-join below reads m through TWO
-      // independent exchange map stages, and the DAGScheduler submits
-      // independent stages concurrently — while m is cold, both stages
-      // compute the full propagate join+aggregate (the expensive half of
-      // every round) instead of one filling the cache for the other.
-      // One honestly-timed count fills it exactly once per round.
-      m.count()
+      val m = labels.union(prop).groupBy("id").agg(min("cc").as("cc"))
+      // the jump self-join below reads m through two exchange map stages
+      fill(m, "Components.connectedComponents/m")
       // pointer jump; y.cc = L(L(v)) <= L(v) by the monotone invariant,
       // least() keeps that explicit rather than implied.
       // localCheckpoint (eager) truncates lineage: the self-join doubles the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash._
 
@@ -870,10 +871,7 @@ object Corpus {
       val dt = documents(s, d)
         .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
         .groupBy("tok", "doc_id").agg(count(lit(1)).as("c"))
-        .persist() // feeds the term totals AND the moment aggregate
-      // eager fill (r13): the broadcastable top-K build job and the
-      // moment probe otherwise race to tokenize+aggregate cold
-      dt.count()
+      fill(dt, "Corpus.term_burstiness/dt") // feeds the top-K build AND the moment probe
       val top = dt.groupBy("tok").agg(sum("c").as("total"))
         .orderBy(desc("total"), asc("tok")).limit(BurstTopK)
       val nd = documents(s, d).agg(count(lit(1)).as("n_docs"))

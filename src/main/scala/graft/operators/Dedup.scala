@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash._
 
@@ -218,18 +219,15 @@ object Dedup {
     * exact and the capped output is always a subset of the uncapped one
     * (a pair is only ever lost, never gained or re-scored).
     *
-    * NOTE the inverted index is persisted (it feeds the size aggregate and
-    * both self-join sides); the caller owns release — the driver mains
-    * clear caches after each materialized query (see Graft.releaseCaches).
+    * NOTE the inverted index is filled (it feeds the size aggregate and
+    * both self-join sides); the caller releases it (Graft.releaseCaches).
     */
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double,
                         dfCap: Option[Long]): DataFrame = {
-    val e = shingleIndex(docs).persist()
-    // eager fill (r13 stage-parallel sweep): the self-join's two exchange
-    // map stages — and on the capped path the rare/df aggregate too —
-    // scan e through INDEPENDENT stages the scheduler runs concurrently;
-    // cold, each recomputes the whole shingle index
-    e.count()
+    val e = shingleIndex(docs)
+    // the self-join's two exchange map stages (and on the capped path the
+    // rare/df aggregate too)
+    fill(e, "Dedup.ngramJaccardPairs/e")
     val n = e.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     val inter = dfCap match {
       case None =>
@@ -345,12 +343,10 @@ object Dedup {
     */
   def prefixJaccardPairs(docs: DataFrame, num: Int, den: Int): DataFrame = {
     graft.Graft.init(docs.sparkSession) // graft_h60 on any caller session
-    val e = shingleIndex(docs).persist()
-    val st = prefixState(e).persist()
-    // eager fill: the verify's broadcast subtree (garr) and the probe
-    // side otherwise race to materialize the cold st/e caches from
-    // separate jobs (see containmentPairs)
-    st.count()
+    val e = persist(shingleIndex(docs))
+    val st = prefixState(e)
+    // the verify's broadcast subtree (garr) and the probe side
+    fill(st, "Dedup.prefixJaccardPairs/st")
     val pref = prefixRowsOf(st, num, den)
     // Candidate pairs: shared prefix shingle + the length filter
     // (J >= t forces min(|x|,|y|) >= t*max(|x|,|y|)).
@@ -404,17 +400,15 @@ object Dedup {
     * unchanged DuckDB oracle both hold row-for-row.
     */
   def containmentPairs(docs: DataFrame): DataFrame = {
-    val e = shingleIndex(docs).persist()
-    // eager fill (r13): prefixState's df aggregate + join, the candidate
-    // join's full-index side, both verify sides and the length aggregate
-    // all scan e through independent stages — cold, the shingle index
-    // was being recomputed several times per query
-    e.count()
-    // One persisted per-doc sorted state feeds the prefix explode, the
+    val e = shingleIndex(docs)
+    // prefixState's df aggregate + join, the candidate join's full-index
+    // side, both verify sides and the length aggregate all scan e
+    fill(e, "Dedup.containmentPairs/e")
+    // One filled per-doc sorted state feeds the prefix explode, the
     // full positional index AND the length relation (nsh) — the separate
     // n aggregate over e is gone with it.
-    val st = prefixState(e).persist()
-    st.count() // eager fill: prefix + full-side jobs otherwise race cold
+    val st = prefixState(e)
+    fill(st, "Dedup.containmentPairs/st")
     val n = st.select(col("doc_id"), col("nsh"))
     // POSITIONAL prefix × full-index candidate join (r13, the PPJoin
     // position filter on top of the r12 prefix law — Xiao et al., §2.5):
@@ -474,7 +468,7 @@ object Dedup {
     * against [[containmentPairs]]; not reachable from `queries`.
     */
   private[graft] def containmentPairsRaw(docs: DataFrame): DataFrame = {
-    val e = shingleIndex(docs).persist()
+    val e = persist(shingleIndex(docs))
     val n = e.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     e.as("a")
       .join(e.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
@@ -503,17 +497,12 @@ object Dedup {
     * the corpus-cleaning pipeline.
     */
   def minhashPairsFor(docs: DataFrame): DataFrame = {
-    // persist: sig feeds the band explode AND both verification join
-    // sides — without it the md5+agg subtree runs 3x (at 100 TB this is
-    // a checkpoint of the signature table). The eager count below fills
-    // the cache at construction time (it would otherwise be raced cold by
-    // the concurrent broadcast/probe jobs); the caller still owns release
-    // — after the consuming action, call Graft.releaseCaches.
-    val sig = signaturesFor(docs).persist()
-    // eager fill: when the verify joins plan as broadcast-hash, their
-    // build jobs launch concurrently with the candidate probe and all
-    // race to materialize the cold signature cache
-    sig.count()
+    // sig feeds the band explode AND both verification join sides —
+    // without the cache the md5+agg subtree runs 3x (at 100 TB this is a
+    // checkpoint of the signature table); the verify joins' broadcast
+    // builds race the candidate probe
+    val sig = signaturesFor(docs)
+    fill(sig, "Dedup.minhashPairsFor/sig")
     val bands = sig.select(col("doc_id"),
       posexplode(array((0 until Bands).map(b => col(s"k$b")): _*)).as(Seq("band", "key")))
     // A pair can collide in several bands -> distinct before verification.
@@ -551,26 +540,10 @@ object Dedup {
     * with a micro-batch-sized incoming side the banded join broadcasts
     * the batch, not the reference corpus.
     */
-  def minhashMatchesAgainst(incoming: DataFrame, refSigs: DataFrame): DataFrame =
-    minhashMatchesReleasable(incoming, refSigs)._1
-
-  /** [[minhashMatchesAgainst]] plus the HANDLE of the one relation it
-    * persists (the incoming-side signatures, consumed by the band explode
-    * and the verify join) — so a per-micro-batch caller
-    * (StreamingOps.gatedIngest) can unpersist exactly what the batch
-    * created after its action, WITHOUT a blanket cacheManager clear that
-    * would also evict the caller's long-lived reference index between
-    * batches (the r10 review caught the streaming probe rebuilding its
-    * 100k-doc index once per micro-batch through exactly that).
-    */
-  private[graft] def minhashMatchesReleasable(incoming: DataFrame,
-                                              refSigs: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val inSig = signaturesFor(incoming).persist()
-    // eager fill (r13 race sweep): the banded candidate probe and the
-    // verify join's sa side otherwise race to compute the micro-batch
-    // signatures cold (2x the md5+agg per batch)
-    inSig.count()
+  def minhashMatchesAgainst(incoming: DataFrame, refSigs: DataFrame): DataFrame = {
+    val inSig = signaturesFor(incoming)
+    // the banded candidate probe and the verify join's sa side
+    fill(inSig, "Dedup.minhashMatchesAgainst/inSig")
     def bandsOf(sig: DataFrame) = sig.select(col("doc_id"),
       posexplode(array((0 until Bands).map(b => col(s"k$b")): _*)).as(Seq("band", "key")))
     val cand = bandsOf(inSig).as("x")
@@ -581,12 +554,11 @@ object Dedup {
     val matches = (0 until NumHashes)
       .map(j => when(col(s"sa.s$j") === col(s"sb.s$j"), 1).otherwise(0))
       .reduce(_ + _)
-    val out = cand
+    cand
       .join(inSig.as("sa"), col("doc_in") === col("sa.doc_id"))
       .join(refSigs.as("sb"), col("doc_ref") === col("sb.doc_id"))
       .where((matches.cast("double") / NumHashes) >= 0.5)
       .select(col("doc_in").as("doc_id")).distinct()
-    (out, inSig)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -667,8 +639,8 @@ object Dedup {
     // whose <= 5-bit keys do not scale. Pinned geometry kept for oracle
     // continuity, caveat recorded where the constant lives.
     "dedup_simhash_pairs" -> { (s, d) =>
-      val fp = simhashed(s, d).persist() // exact-size plan -> broadcast join
-      fp.count() // eager: broadcast + probe jobs otherwise both fill it
+      val fp = simhashed(s, d)
+      fill(fp, "Dedup.dedup_simhash_pairs/fp") // exact-size plan -> broadcast join
       val chunks = fp.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(k =>
           shiftright(col("simhash"), 15 * k).bitwiseAND(lit(32767L))): _*))
@@ -706,8 +678,8 @@ object Dedup {
       // instead of a sort-merge join whose per-group nested loop pays
       // row-copy + comparator cost on every candidate it emits — the
       // frontier measured the same join 10x faster under broadcast-hash
-      val fp = simhashed(s, d).persist()
-      fp.count() // eager: broadcast + probe jobs otherwise both fill it
+      val fp = simhashed(s, d)
+      fill(fp, "Dedup.dedup_simhash_pairs_exact/fp")
       val tkeyed = fp.select(col("doc_id"), col("simhash"),
         posexplode(array(SimhashTruthBands.map { case (off, w) =>
           shiftright(col("simhash"), off).bitwiseAND(lit((1L << w) - 1))
@@ -890,11 +862,10 @@ object Dedup {
     // equi-join — never all-pairs — per geometry.
     "minhash_recall_frontier" -> { (s, d) =>
       val docs = documents(s, d).select("doc_id", "text")
-      val sig = signaturesFor(docs).persist()
-      // eager fill (r13): the banded self-join reads keyed (and through
-      // it sig) via two independent exchange map stages — cold, the
-      // signature computation ran twice
-      sig.count()
+      val sig = signaturesFor(docs)
+      // the banded self-join reads keyed (and through it sig) via two
+      // exchange map stages
+      fill(sig, "Dedup.minhash_recall_frontier/sig")
       val keyed = sig.select(col("doc_id"), explode(array(
         MinhashFrontierGrid.zipWithIndex.flatMap { case ((bb, rr), gi) =>
           (0 until bb).map { b =>
@@ -911,11 +882,9 @@ object Dedup {
             col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.g").as("g"),
           col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct().persist()
-      // eager fill: nc and tp are both broadcast-side aggregates of the
-      // final 6-row join — their jobs launch concurrently and otherwise
-      // both compute the cold banded-join+distinct relation
-      cand.count()
+        .distinct()
+      // nc and tp are both broadcast-side aggregates of the final 6-row join
+      fill(cand, "Dedup.minhash_recall_frontier/cand")
       // J >= 0.5 = 1/2 truth via lossless prefix filtering; checkpointed
       // because BOTH the semi-join and the 1-row count consume it.
       val truth = prefixJaccardPairs(docs, 1, 2)
@@ -955,11 +924,10 @@ object Dedup {
     // banded equi-join. Truth is EXACT (Hamming <= SimhashHammingMax) via
     // the 11-band pigeonhole index — lossless, never all-pairs.
     "simhash_recall_frontier" -> { (s, d) =>
-      val fp = simhashed(s, d).persist()
-      // eager fill (r13): the banded join's probe/build sides otherwise
-      // race to fill fp cold, and the exact cache size also hardens the
-      // broadcast-hash plan choice the r12 persist was added for
-      fp.count()
+      val fp = simhashed(s, d)
+      // the banded join's probe/build sides; the exact cache size also
+      // hardens the broadcast-hash plan choice the r12 persist was added for
+      fill(fp, "Dedup.simhash_recall_frontier/fp")
       val xorv = col("x.simhash").bitwiseXOR(col("y.simhash"))
       // Distinct-candidate counts per geometry, WITHOUT materializing a
       // distinct pair relation: the banded equi-join emits a colliding
@@ -1074,11 +1042,10 @@ object Dedup {
     segmentRewriteFor(documents(s, d).select("doc_id", "text"))
 
   def segmentRewriteFor(docs: DataFrame): DataFrame = {
-    val occ = segmentOccurrences(docs).persist()
-    // eager fill (r13): the keep-join's probe side, the first-occurrence
-    // aggregate and the per-doc n_segs aggregate scan occ through
-    // independent stages — cold, each recomputed the segment explode
-    occ.count()
+    val occ = segmentOccurrences(docs)
+    // the keep-join's probe side, the first-occurrence aggregate and the
+    // per-doc n_segs aggregate
+    fill(occ, "Dedup.segmentRewriteFor/occ")
     val first = occ.groupBy(col("k").as("fk"))
       .agg(min(struct(col("doc_id"), col("seg_idx"))).as("w"))
     val kept = occ.join(first,
@@ -1099,10 +1066,8 @@ object Dedup {
   /** LSH-bucketed cosine near-dup pairs (cos >= `CosThreshold`, 6-dp
     * rounded). The base scan+map subtree is consumed three times (band
     * explode + both verify sides), so it is persisted like
-    * `minhashPairsFor`'s signature relation and eagerly filled at
-    * construction (the banded count below — the self-join's two sides
-    * otherwise race it cold); the caller still owns release via
-    * Graft.releaseCaches after the consuming action.
+    * `minhashPairsFor`'s signature relation and filled through the
+    * banded relation below.
     */
   private val CosThreshold = 0.4
   private def embeddingCosineLsh(s: SparkSession, d: String): DataFrame =
@@ -1139,8 +1104,8 @@ object Dedup {
     require(planesPerBand >= 1 && planesPerBand <= 62,
       s"planesPerBand must be in [1, 62] (Long key bits), got $planesPerBand")
     graft.Graft.init(vecs.sparkSession) // graft_lsh_band_keys on any session
-    val base = vecs.select(col("vec_id"), col("e"))
-      .withColumn("nrm", sqrt(TextHash.dot(col("e"), col("e")))).persist()
+    val base = persist(vecs.select(col("vec_id"), col("e"))
+      .withColumn("nrm", sqrt(TextHash.dot(col("e"), col("e")))))
     // graft_lsh_band_keys: the former per-band unrolled sign projection
     // generated 17,968 B (16x4) / 28,170 B (16x8 sized) methods — past
     // the JIT window, Volcano fallback (BytecodeAudit, cachedPlan
@@ -1149,13 +1114,10 @@ object Dedup {
       posexplode(call_function("graft_lsh_band_keys",
         col("e"), lit(bands), lit(planesPerBand)))
         .as(Seq("band", "key")))
-      // both sides of the self-join below read this — without the persist
-      // each side re-runs the bands × hyperplanes × dim projection
-      .persist()
-    // eager fill (r13): the self-join's two exchange map stages run
-    // concurrently — cold, each computed the banded projection (and
-    // transitively the base norms, cached along the way)
-    banded.count()
+    // both sides of the self-join below read this — uncached, each side
+    // re-runs the bands × hyperplanes × dim projection (filling it also
+    // fills the base norms)
+    fill(banded, "Dedup.embeddingCosineLshOn/banded")
     // A pair can collide in several bands -> distinct before verification.
     val cand = banded.as("x")
       .join(banded.as("y"),

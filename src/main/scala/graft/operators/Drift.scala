@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash.{toks, toksSql}
 
@@ -104,8 +105,7 @@ object Drift {
           window = 3, carry = Seq("source"))
         .select(col("source"), col("chunk").substr(col("li"), lit(3)).as("gram"))
         .groupBy("source", "gram").agg(count(lit(1)).as("c"))
-        .persist() // feeds the norm aggregate AND both self-join sides
-        .transform { df => df.count(); df } // eager: the two broadcast(nrm) jobs otherwise race to fill it
+      fill(g, "Drift.source_style_cosine/g") // feeds the norm aggregate AND both self-join sides
       val nrm = g.groupBy("source")
         .agg(sum(col("c").cast(dec) * col("c")).as("ss"))
         .select(col("source"), sqrt(col("ss").cast("double")).as("nrm"))
@@ -134,10 +134,10 @@ object Drift {
     "style_burrows_delta" -> { (s, d) =>
       val dec = DecimalType(38, 0)
       // ONE corpus pass: every relation below derives from the
-      // (source, tok, c) shuffle srcTok already defines (persisted —
-      // three consumers; caller releases via Graft.releaseCaches)
-      val st = srcTok(s, d).persist()
-      st.count() // eager: the broadcast(topw) jobs otherwise race the probe to fill it
+      // (source, tok, c) shuffle srcTok already defines (filled — three
+      // consumers)
+      val st = srcTok(s, d)
+      fill(st, "Drift.style_burrows_delta/st")
       val topw = st.groupBy(col("tok").as("word")).agg(sum("c").as("c"))
         .orderBy(desc("c"), asc("word")).limit(DeltaTopM).select("word")
       val ns = st.groupBy("source").agg(sum("c").as("n_s"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash.toks
 
@@ -128,11 +129,8 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int = HitsRounds): DataFrame = {
     val dec = DecimalType(38, 0)
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .persist()
-    // eager fill (r13): the node-set union's two legs and each
-    // half-round's join stages scan e through independent tasks — cold,
-    // the caller's edge derivation ran more than once
-    e.count()
+    // the node-set union's two legs and each half-round's join stages
+    fill(e, "Graph.hits/e")
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
     // empty graph (every doc <= 1 token): no rounds to run, and the
@@ -174,12 +172,11 @@ object Graph {
     * Returns (node, rank) with rank at [[Scale]] fixed point.
     */
   def pagerank(edges: DataFrame, iters: Int = Iters): DataFrame = {
-    // persisted for the 10 iterations; the returned plan is lazy, so the
-    // caller contract is the library-wide one — Graft.releaseCaches after
-    // the consuming action (see Dedup.minhashPairsFor's note).
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w")).persist()
-    val outw = e.groupBy("src").agg(sum("w").as("out_w")).persist()
-    val n = outw.count() // vocab-sized scalar; the one intentional action
+    // persisted for the 10 iterations; the caller releases them after the
+    // consuming action (Graft.releaseCaches)
+    val e = persist(edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    val outw = e.groupBy("src").agg(sum("w").as("out_w"))
+    val n = fill(outw, "Graph.pagerank/outw") // vocab-sized scalar
     val base = Scale / n
     val teleport = (TeleNum * base) / 100L
     var ranks = outw.select(col("src").as("node"), lit(base).as("rank"))
@@ -210,10 +207,10 @@ object Graph {
     */
   def personalizedPagerank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = Iters): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w")).persist()
-    val outw = e.groupBy("src").agg(sum("w").as("out_w")).persist()
-    val sd = seeds.select("node").distinct().persist()
-    val ns = sd.count() // seed-set-sized scalar; the one intentional action
+    val e = persist(edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    val outw = persist(e.groupBy("src").agg(sum("w").as("out_w")))
+    val sd = seeds.select("node").distinct()
+    val ns = fill(sd, "Graph.personalizedPagerank/sd") // seed-set-sized scalar
     // Empty seed set → the zero vector: return the empty rank relation
     // instead of dividing by zero (the BPE pair-exhausted precedent; the
     // r10 scale probe hit this on a synthetic corpus with no English
@@ -225,7 +222,8 @@ object Graph {
     var ranks = sd.select(col("node"), lit(base).as("rank"))
     // each round's rank relation is reachable-subgraph-sized — size the
     // round shuffles to the edge list (Graft.withIterShufflePartitions)
-    graft.Graft.withIterShufflePartitions(edges.sparkSession, e.count()) {
+    graft.Graft.withIterShufflePartitions(edges.sparkSession,
+      fill(e, "Graph.personalizedPagerank/e")) {
     for (_ <- 1 to iters) {
       val contrib = ranks.as("r")
         .join(e.as("e"), col("r.node") === col("e.src"))
@@ -337,13 +335,13 @@ object Graph {
     val base = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .localCheckpoint()
     val nodes = base.groupBy(col("src").as("id")).agg(max("w").as("sw"))
-    val e = base
-      .union(nodes.select(col("id"), col("id"), col("sw")))
-      .persist()
+    val e = persist(base
+      .union(nodes.select(col("id"), col("id"), col("sw"))))
     var labels = nodes.select(col("id"), col("id").as("lab")).localCheckpoint()
     // votes/labels are edge-subgraph-sized every round — size the round
     // shuffles to that, not the session (Graft.withIterShufflePartitions)
-    graft.Graft.withIterShufflePartitions(edges.sparkSession, e.count()) {
+    graft.Graft.withIterShufflePartitions(edges.sparkSession,
+      fill(e, "Graph.labelPropagation/e")) {
       for (_ <- 1 to rounds) {
         val votes = labels.as("l").join(e.as("e"), col("l.id") === col("e.src"))
           .groupBy(col("e.dst").as("id"), col("l.lab"))
@@ -372,12 +370,13 @@ object Graph {
     * count a constant, so there is no convergence loop to detect.
     */
   def bfsLevels(seeds: DataFrame, und: DataFrame, rounds: Int): DataFrame = {
-    val e = und.toDF("src", "dst").persist()
+    val e = persist(und.toDF("src", "dst"))
     var levels = seeds.toDF("id").distinct()
       .select(col("id"), lit(0).as("level")).localCheckpoint()
     // frontier/levels are bounded by the edge subgraph — size the round
     // shuffles to it (Graft.withIterShufflePartitions)
-    graft.Graft.withIterShufflePartitions(und.sparkSession, e.count()) {
+    graft.Graft.withIterShufflePartitions(und.sparkSession,
+      fill(e, "Graph.bfsLevels/e")) {
       for (r <- 1 to rounds) {
         val prop = levels.where(col("level") === r - 1).as("f")
           .join(e.as("e"), col("f.id") === col("e.src"))
@@ -409,8 +408,7 @@ object Graph {
     // vocabulary so the restart distribution is well-defined.
     "graph_ppr_stopwords" -> { (s, d) =>
       // persisted: consumed by the seed filter AND the iteration's e/outw
-      // (caller-owned lifecycle — Graft.releaseCaches after the action)
-      val edges = cooccurEdges(documents(s, d).select("doc_id", "text")).persist()
+      val edges = persist(cooccurEdges(documents(s, d).select("doc_id", "text")))
       val seedWords = TextAnalysis.langSignatures.toMap.apply("en")
       val seeds = edges.select(col("src").as("node"))
         .where(col("node").isin(seedWords.map(_.asInstanceOf[Any]): _*))
@@ -422,8 +420,7 @@ object Graph {
     // HITS hubs/authorities on the DIRECTED bigram-precedence graph:
     // authorities are words many distinctive contexts point INTO, hubs
     // words that point into many authorities — link analysis the
-    // co-occurrence PageRank can't express (it has no direction). Edges
-    // persist; caller releases via Graft.releaseCaches.
+    // co-occurrence PageRank can't express (it has no direction).
     "graph_hits" -> { (s, d) =>
       hits(precedenceEdges(documents(s, d).select("doc_id", "text")))
         .orderBy(desc("authority"), asc("node"))
@@ -469,17 +466,14 @@ object Graph {
     // = Σ deg·(deg−1)/2 in exact longs; the coefficient is the only
     // division.
     "graph_triangles" -> { (s, d) =>
-      // persist: und feeds the oriented edges AND the node/wedge censuses —
-      // unpersisted, the corpus-sized edge construction runs 3x (caller
-      // releases via Graft.releaseCaches, library-wide contract)
-      val und = cooccurEdges(documents(s, d).select("doc_id", "text")).persist()
-      // eager fills (r13 race sweep): the three broadcast 1-row censuses
-      // and the triangle probe launch as concurrent jobs, and the
-      // triangle self-join reads e through three independent exchange
-      // map stages — cold, each re-derived the corpus-sized edge build
-      und.count()
-      val e = und.where(col("src") < col("dst")).select("src", "dst").persist()
-      e.count()
+      // und feeds the oriented edges AND the node/wedge censuses —
+      // uncached, the corpus-sized edge construction runs 3x. The three
+      // broadcast 1-row censuses race the triangle probe, and the
+      // triangle self-join reads e through three exchange map stages.
+      val und = cooccurEdges(documents(s, d).select("doc_id", "text"))
+      fill(und, "Graph.graph_triangles/und")
+      val e = und.where(col("src") < col("dst")).select("src", "dst")
+      fill(e, "Graph.graph_triangles/e")
       val tri = orientedTriangles(e)
       val nTri = tri.agg(count(lit(1)).as("n_triangles"))
       val nEdges = e.agg(count(lit(1)).as("n_edges"))
@@ -500,10 +494,9 @@ object Graph {
     // triangle credits its three corners.
     "graph_node_triangles" -> { (s, d) =>
       val und = cooccurEdges(documents(s, d).select("doc_id", "text"))
-      val e = und.where(col("src") < col("dst")).select("src", "dst").persist()
-      // eager fill (r13): the triangle self-join's three exchange map
-      // stages otherwise race to build e (and the edge derivation) cold
-      e.count()
+      val e = und.where(col("src") < col("dst")).select("src", "dst")
+      // the triangle self-join's three exchange map stages
+      fill(e, "Graph.graph_node_triangles/e")
       val tri = orientedTriangles(e)
       tri.select(col("a").as("node"))
         .union(tri.select(col("b").as("node")))
@@ -521,19 +514,18 @@ object Graph {
     // scalable triangle count. Orientation choice cannot change the
     // census, and the identical output row (vs graph_triangles) proves it.
     "graph_triangles_by_degree" -> { (s, d) =>
-      // persist: und feeds the degree table, the oriented edges, and the
+      // und feeds the degree table, the oriented edges, and the
       // node/wedge censuses — 4 consumers (see graph_triangles note)
-      val und = cooccurEdges(documents(s, d).select("doc_id", "text")).persist()
-      // eager fills (r13 race sweep — see graph_triangles)
-      und.count()
+      val und = cooccurEdges(documents(s, d).select("doc_id", "text"))
+      fill(und, "Graph.graph_triangles_by_degree/und")
       val deg = und.groupBy("src").agg(count(lit(1)).as("dg"))
         .select(col("src").as("v"), col("dg"))
       val eo = und.join(deg.as("da"), col("src") === col("da.v"))
         .join(deg.as("db"), col("dst") === col("db.v"))
         .where(col("da.dg") < col("db.dg") ||
           (col("da.dg") === col("db.dg") && col("src") < col("dst")))
-        .select("src", "dst").persist()
-      eo.count()
+        .select("src", "dst")
+      fill(eo, "Graph.graph_triangles_by_degree/eo")
       val tri = orientedTriangles(eo)
       val nTri = tri.agg(count(lit(1)).as("n_triangles"))
       val nEdges = eo.agg(count(lit(1)).as("n_edges"))
@@ -554,11 +546,10 @@ object Graph {
     // clique-embedded tokens from hub tokens. Same oriented triangle join;
     // exact integer numerator/denominator, one rounded division per row.
     "graph_local_clustering" -> { (s, d) =>
-      val und = cooccurEdges(documents(s, d).select("doc_id", "text")).persist()
-      // eager fills (r13 race sweep — see graph_triangles)
-      und.count()
-      val e = und.where(col("src") < col("dst")).select("src", "dst").persist()
-      e.count()
+      val und = cooccurEdges(documents(s, d).select("doc_id", "text"))
+      fill(und, "Graph.graph_local_clustering/und") // see graph_triangles
+      val e = und.where(col("src") < col("dst")).select("src", "dst")
+      fill(e, "Graph.graph_local_clustering/e")
       val tri = orientedTriangles(e)
       val perNode = tri.select(col("a").as("node"))
         .union(tri.select(col("b").as("node")))
@@ -599,10 +590,9 @@ object Graph {
     // frontier-sized equi-join. Exact integer levels, so the unrolled
     // recursive-CTE oracle is bit-identical.
     "graph_bfs_levels" -> { (s, d) =>
-      val e = cooccurEdges(documents(s, d).select("doc_id", "text")).persist()
-      // eager fill (r13): the broadcast seed aggregate and the first BFS
-      // round otherwise race to build the edge list cold
-      e.count()
+      val e = cooccurEdges(documents(s, d).select("doc_id", "text"))
+      // the broadcast seed aggregate and the first BFS round
+      fill(e, "Graph.graph_bfs_levels/e")
       val seed = e.agg(min("src").as("id"))
       bfsLevels(seed, e.select("src", "dst"), BfsRounds)
         .select(col("id").as("node"), col("level"))
@@ -621,9 +611,8 @@ object Graph {
     // sum_s2 stays in a long while 2W · max community strength < 2^63 —
     // beyond that, scale the weights (the moments pipeline is unchanged).
     "graph_modularity" -> { (s, d) =>
-      val e = nearDupEdges(s, d)
-        .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-        .persist()
+      val e = persist(nearDupEdges(s, d)
+        .select(col("src"), col("dst"), col("w").cast("long").as("w")))
       val labels = labelPropagation(e, LpRounds)
       val wTot = e.agg(sum("w").as("w_total"))
       val intra = e
@@ -656,10 +645,9 @@ object Graph {
     // with the oracle.
     "graph_assortativity" -> { (s, d) =>
       val e = cooccurEdges(documents(s, d).select("doc_id", "text"))
-        .select("src", "dst").persist()
-      // eager fill (r13): the two broadcastable deg build jobs and the
-      // moment probe otherwise race to build the edge list cold
-      e.count()
+        .select("src", "dst")
+      // the two broadcastable deg build jobs and the moment probe
+      fill(e, "Graph.graph_assortativity/e")
       val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       val m = e
         .join(deg.select(col("src").as("_a"), col("deg").as("dx")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash._
 
@@ -85,9 +86,9 @@ object Learn {
     // cache every round re-scans the parquet and re-tokenizes the corpus —
     // 10 tokenization passes for a 10-round train, plus an 11th in the
     // caller's scoring pass. The cached frame is 5 numeric columns (no
-    // text), corpus-partitioned, spillable; the bench releases it after
-    // the query (caller-owned cache lifecycle, Bench.scala).
-    val x = features(s, d).persist()
+    // text), corpus-partitioned, spillable; the caller releases it after
+    // the query (Graft.releaseCaches).
+    val x = persist(features(s, d))
     // Model state lives on the DRIVER between rounds — the treeAggregate
     // pattern of Spark MLlib's own GradientDescent (one O(1) gradient
     // aggregate shipped back per round, weights folded driver-side,
@@ -325,14 +326,12 @@ object Learn {
     // totals and the vocabulary size then derive from cc itself — a
     // (class×vocab)-sized model relation — instead of re-tokenizing the
     // corpus once per statistic (n_c = Σ cnt per class; every distinct
-    // token appears in some class row). Persisted: three consumers.
+    // token appears in some class row). Filled: three consumers, and
+    // ctot/v are broadcast builds racing the cc probe in the scoring
+    // queries.
     val cc = tok.groupBy(col("lang").as("cls"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-      .persist()
-    // eager fill (r13): ctot/v are broadcast-side aggregates consumed
-    // concurrently with the cc probe in the scoring queries — cold, each
-    // job re-tokenized the corpus
-    cc.count()
+    fill(cc, "Learn.nbModel/cc")
     NbModel(
       cc = cc,
       ctot = cc.groupBy("cls").agg(sum("cnt").as("n_c")),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 
 /** End-to-end corpus-cleaning pipeline — the composition a pretraining
@@ -34,12 +35,10 @@ object Pipeline {
       .select("doc_id")
     // persist: gated feeds the minhash signature subtree AND the final
     // anti-join base — without it the quality gate + both semi-joins run
-    // twice. Caller owns release (Graft.releaseCaches; the driver mains
-    // call it after each materialized query).
-    val gated = base
+    // twice
+    val gated = persist(base
       .join(qualityOk, Seq("doc_id"), "left_semi")
-      .join(Dedup.exactKeepIds(base), Seq("doc_id"), "left_semi")
-      .persist()
+      .join(Dedup.exactKeepIds(base), Seq("doc_id"), "left_semi"))
     val nearDupDrop = Dedup.minhashPairsFor(gated).select(col("doc_b").as("doc_id"))
     gated.select("doc_id").join(nearDupDrop, Seq("doc_id"), "left_anti")
   }
@@ -68,11 +67,11 @@ object Pipeline {
     val qFlags = TextAnalysis.stats(docs.select("doc_id", "text"))
       .select(col("doc_id"),
         (col("quality_score") >= QualityThreshold).as("q_ok"))
-    val flags = docs.join(urlFlags, "doc_id").join(qFlags, "doc_id").persist()
+    val flags = persist(docs.join(urlFlags, "doc_id").join(qFlags, "doc_id"))
     val g2 = flags.where(col("url_ok") && col("q_ok"))
       .select("doc_id", "source", "text")
-    val g3 = g2.join(Dedup.exactKeepIds(g2.select("doc_id", "text")),
-      Seq("doc_id"), "left_semi").persist()
+    val g3 = persist(g2.join(Dedup.exactKeepIds(g2.select("doc_id", "text")),
+      Seq("doc_id"), "left_semi"))
     val pairs = Dedup.minhashPairsFor(g3.select("doc_id", "text"))
       .select("doc_a", "doc_b")
     val cc = Components.connectedComponents(g3.select("doc_id"), pairs)
@@ -89,12 +88,9 @@ object Pipeline {
       .join(contam, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("component_id"), col("source"),
         size(TextHash.toks(col("text"))).cast("long").as("n_tok"))
-      .persist()
-      // eager fill: fin and packs are both broadcast-side aggregates of
-      // the final cross join — their jobs launch concurrently and
-      // otherwise both compute the cold survivor relation (flags/g3 are
-      // already warmed transitively by the CC build above)
-      .transform { df => df.count(); df }
+    // fin and packs are both broadcast-side aggregates of the final cross
+    // join (flags/g3 are already warmed transitively by the CC build)
+    fill(g5, "Pipeline.pretrainFunnelFor/g5")
     val sk = TextHash.h60(
       concat(lit(Corpus.SplitSalt), col("component_id").cast("string"))) % 1000
     val headCounts = flags.agg(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash._
 
@@ -65,25 +66,19 @@ object Retrieval {
     * score = idf * tf*(k1+1) / (tf + k1*((1-b) + b*dl/avgdl)).
     */
   private def bm25(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
+    val docs = persist(documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("t"))
-      .select(col("doc_id"), col("t"), size(col("t")).cast("long").as("dl"))
-      .persist()
+      .select(col("doc_id"), col("t"), size(col("t")).cast("long").as("dl")))
     // Prune to the query vocabulary BEFORE the (doc_id, term) shuffle.
     val tf = docs
       .select(col("doc_id"), col("dl"), explode(col("t")).as("term"))
       .where(col("term").isin(QueryTerms: _*))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-      .persist()
-    // Eager fill (the r12 cold-cache-race pattern, see
-    // Dedup.prefixJaccardPairs): the `corpus` and `dfreq` BROADCAST
-    // subtrees and the tf probe side execute as separate concurrent
-    // Spark jobs; without the persists + this honestly-timed count the
-    // corpus is re-tokenized once PER JOB (3x — toks() is the dominant
-    // per-row cost of the whole bm25 family). Filling tf also fills
-    // docs transitively; the caller owns release via Graft.releaseCaches.
-    tf.count()
+    // the `corpus` and `dfreq` broadcast builds and the tf probe would
+    // each re-tokenize the corpus (toks() is the dominant per-row cost of
+    // the bm25 family); filling tf also fills docs transitively
+    fill(tf, "Retrieval.bm25/tf")
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val corpus = docs.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
     tf.join(broadcast(dfreq), "term")
@@ -228,11 +223,7 @@ object Retrieval {
       val docs = documents(s, d).select("doc_id", "text")
       val pos = docs
         .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "tok")))
-        .persist()
-      // eager fill (r13): the three posting-list join legs scan pos
-      // through independent exchange map stages — cold, each
-      // re-tokenized the corpus
-      pos.count()
+      fill(pos, "Retrieval.phrase_search/pos") // the three posting-list join legs
       val top = TextHash.shingleRows(docs)
         .groupBy("sh").agg(count(lit(1)).as("c"))
         .orderBy(desc("c"), asc("sh")).limit(1)
@@ -385,8 +376,7 @@ object Retrieval {
       val docsE = documents(s, d).select(col("doc_id"), col("text"))
         .join(b.select(col("vec_id").as("doc_id"), col("e"), col("nrm")),
           "doc_id")
-        .persist() // feeds the semantic grid AND both lexical sides
-        .transform { df => df.count(); df } // eager: broadcast(q)/broadcast(qsh) jobs otherwise race to fill it
+      fill(docsE, "Retrieval.rag_hybrid_fusion/docsE") // the semantic grid AND both lexical sides
       // semantic leg: FULL ranking of the embedded corpus per query
       val q = docsE.where(col("doc_id") < Similarity.QuerySet)
         .select(col("doc_id").as("q_id"), col("e").as("qe"),
@@ -394,17 +384,15 @@ object Retrieval {
       val c = docsE.select(col("doc_id").as("cand_id"), col("e").as("ce"),
         col("nrm").as("cn"))
       val ws = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
-      val sem = broadcast(q).join(c, col("q_id") =!= col("cand_id"))
+      val sem = persist(broadcast(q).join(c, col("q_id") =!= col("cand_id"))
         .select(col("q_id"), col("cand_id"),
           round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
             .as("cos"))
-        .withColumn("r_sem", row_number().over(ws))
-        .persist() // scaffold for the lexical leg + the fusion join
+        .withColumn("r_sem", row_number().over(ws))) // scaffold for the lexical leg + the fusion join
       // lexical leg: distinct-shingle Jaccard, inverted 60-bit-key join
       val sh = shingleRows(docsE.select("doc_id", "text"))
         .select(col("doc_id"), h60(col("sh")).as("g")).distinct()
-        .persist() // n + both sides of the intersection join
-        .transform { df => df.count(); df } // eager: same race, three consumers
+      fill(sh, "Retrieval.rag_hybrid_fusion/sh") // n + both sides of the intersection join
       val n = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       val qsh = sh.where(col("doc_id") < Similarity.QuerySet)
         .select(col("doc_id").as("q_id"), col("g"))

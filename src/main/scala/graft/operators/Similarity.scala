@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import TextHash._
 
@@ -545,19 +546,15 @@ object Similarity {
   /** (anchor_id, pos_id, pos_cos, negs, n_negs): the contrastive example
     * assembly shared by `contrastive_examples` and `contrastive_batches`.
     * The kNN graph feeds both the positive and negative branches, so it
-    * persists (caller releases via Graft.releaseCaches).
+    * is filled (caller releases via Graft.releaseCaches).
     */
   private def contrastiveExamples(s: SparkSession, d: String): DataFrame = {
     val lab = embeddings(s, d).select(col("vec_id"), col("label"))
     val g = knnGraph(s, d)
       .join(lab.select(col("vec_id").as("q_id"), col("label").as("ql")), "q_id")
       .join(lab.select(col("vec_id").as("cand_id"), col("label").as("cl")), "cand_id")
-      .persist()
-    // eager fill: the pos and neg window branches read g through two
-    // INDEPENDENT exchange map stages that the scheduler runs
-    // concurrently — cold, each computes the whole banded kNN join
-    // (same defect class as the r12 broadcast race, stage-parallel form)
-    g.count()
+    // the pos and neg window branches read g through two exchange map stages
+    fill(g, "Similarity.contrastiveExamples/g")
     val wq = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
     val pos = g.where(col("ql") === col("cl"))
       .withColumn("pr", row_number().over(wq)).where(col("pr") === 1)
@@ -660,15 +657,13 @@ object Similarity {
     // path (query side explodes to n_probes rows, still broadcast; the
     // corpus streams once per point).
     "ann_recall_frontier" -> { (s, d) =>
-      val b2 = base(s, d).withColumn("bkt", bucket(col("e"))).persist()
-      val exact = queries("ann_cosine_topk")(s, d)
-        .select("q_id", "cand_id").persist()
-      // eager fills (r13): per bits branch, the broadcast q subtree, the
-      // corpus probe, the n_cand broadcast agg and the total broadcast
-      // agg run as SEPARATE concurrent jobs — while b2/exact are cold
-      // every one of them recomputes the shared base/exact-scan subtree
-      // (the r12 cold-cache broadcast race, here multiplied by the grid)
-      b2.count(); exact.count()
+      val b2 = persist(base(s, d).withColumn("bkt", bucket(col("e"))))
+      val exact = persist(queries("ann_cosine_topk")(s, d)
+        .select("q_id", "cand_id"))
+      // per bits branch, the broadcast q subtree, the corpus probe, the
+      // n_cand broadcast agg and the total broadcast agg all read b2/exact
+      fill(b2, "Similarity.ann_recall_frontier/b2")
+      fill(exact, "Similarity.ann_recall_frontier/exact")
       // ARM-FUSED (r13): the radius-r mask set {m : bitCount(m) <= r} is
       // a PREFIX of the radius-(r+1) set, and a candidate matches a query
       // through exactly ONE mask (m = qb0 ^ cb) — so the whole radius
@@ -692,16 +687,15 @@ object Similarity {
             col("m").bitwiseXOR(col("qb0")).as("qb"))
         val c = b2.select(col("vec_id").as("cand_id"), col("e").as("ce"),
           col("nrm").as("cn"), (col("bkt") % mod).as("cb"))
-        // persist: the match relation feeds the per-arm rank AND the
-        // per-arm n_cand count (broadcast join — no exchange for
-        // ReusedExchange to share); caller releases via releaseCaches
+        // the match relation feeds the per-arm rank AND the per-arm
+        // n_cand count (broadcast join — no exchange for ReusedExchange
+        // to share)
         val m = broadcast(q).join(c,
             col("qb") === col("cb") && col("q_id") =!= col("cand_id"))
           .select(col("q_id"), col("cand_id"), col("k"),
             round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
               .as("cos"))
-          .persist()
-        m.count() // eager: rank + n_cand jobs otherwise fill it cold
+        fill(m, "Similarity.ann_recall_frontier/m")
         // expand to (radius, match) rows: arm r owns the k <= r slice
         val mArm = m.select(col("q_id"), col("cand_id"), col("cos"), col("k"),
             explode(array(radii.map(r => lit(r.toLong)): _*)).as("radius"))
@@ -743,12 +737,12 @@ object Similarity {
     // shape (argmax-then-mask probe chain, broadcast query side, corpus
     // streamed once per point from the persisted base).
     "ann_ivf_recall_frontier" -> { (s, d) =>
-      val b2 = base(s, d).persist()
-      val exact = queries("ann_cosine_topk")(s, d)
-        .select("q_id", "cand_id").persist()
-      // eager fills: same per-point broadcast/probe job races as
-      // ann_recall_frontier (see there)
-      b2.count(); exact.count()
+      val b2 = persist(base(s, d))
+      val exact = persist(queries("ann_cosine_topk")(s, d)
+        .select("q_id", "cand_id"))
+      // same per-point consumers as ann_recall_frontier (see there)
+      fill(b2, "Similarity.ann_ivf_recall_frontier/b2")
+      fill(exact, "Similarity.ann_ivf_recall_frontier/exact")
       // ARM-FUSED (r13, same law as ann_recall_frontier): the argmax-
       // then-mask probe chain for p probes is a PREFIX of the chain for
       // p' > p (masking only removes the already-probed cell), and a
@@ -774,16 +768,14 @@ object Similarity {
           col("nrm").as("qn"),
           posexplode(array((1 to maxp).map(k => col(s"c$k")): _*))
             .as(Seq("k0", "probe")))
-        // persist: the match relation feeds the per-arm rank AND the
-        // per-arm n_cand count (broadcast join — no exchange to reuse);
-        // caller releases via releaseCaches
+        // the match relation feeds the per-arm rank AND the per-arm
+        // n_cand count (broadcast join — no exchange to reuse)
         val m = broadcast(q).join(c,
             col("probe") === col("cell") && col("q_id") =!= col("cand_id"))
           .select(col("q_id"), col("cand_id"), (col("k0") + 1).as("k"),
             round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
               .as("cos"))
-          .persist()
-        m.count() // eager: rank + n_cand jobs otherwise fill it cold
+        fill(m, "Similarity.ann_ivf_recall_frontier/m")
         val mArm = m.select(col("q_id"), col("cand_id"), col("cos"), col("k"),
             explode(array(ps.map(p => lit(p.toLong)): _*)).as("probes"))
           .where(col("k") <= col("probes"))
@@ -830,11 +822,9 @@ object Similarity {
         ranked(broadcast(q).join(c, col("q_id") =!= col("cand_id")))
           .select("q_id", "cand_id")
       }
-      val exact = topkAt(Dim).persist()
-      // eager fill: the three per-variant semi-join probes and the total
-      // broadcast agg otherwise race to fill exact cold (see the
-      // frontier queries above)
-      exact.count()
+      val exact = topkAt(Dim)
+      // the three per-variant semi-join probes and the total broadcast agg
+      fill(exact, "Similarity.ann_truncate_recall/exact")
       def recallOf(dims: Int): DataFrame =
         exact.join(topkAt(dims), Seq("q_id", "cand_id"), "left_semi")
           .agg(count(lit(1)).as("hits"))
@@ -873,11 +863,10 @@ object Similarity {
     // false-neighbors before clustering. Self-join of the kNN edge list on
     // the reversed key pair (edge-list-sized, not corpus-sized).
     "ann_mutual_knn" -> { (s, d) =>
-      // persist: the fwd and rev branches both read the banded-join +
-      // window graph; without it the corpus×bucket join runs twice
-      // (caller releases via Graft.releaseCaches)
-      val g = knnGraph(s, d).persist()
-      g.count() // eager: the semi-join's broadcast + probe jobs otherwise both fill it
+      // the fwd and rev branches both read the banded-join + window
+      // graph; uncached, the corpus×bucket join runs twice
+      val g = knnGraph(s, d)
+      fill(g, "Similarity.ann_mutual_knn/g")
       val fwd = g.where(col("q_id") < col("cand_id"))
         .select(col("q_id").as("a"), col("cand_id").as("b"), col("cos"))
       val rev = g.where(col("q_id") > col("cand_id"))
@@ -892,11 +881,11 @@ object Similarity {
     // signal; CC chains them transitively). Reuses the shared iterative
     // CC kernel: singletons never iterate, rounds are edge-subgraph-sized.
     "ann_knn_components" -> { (s, d) =>
-      // persist: fwd + rev both read the kNN graph, and the CC kernel's
-      // edge materialization would otherwise recompute the banded join
-      // again (measured 12.4 s -> the graph is the dominant cost)
-      val g = knnGraph(s, d).persist()
-      g.count() // eager: the semi-join's broadcast + probe jobs otherwise both fill it
+      // fwd + rev both read the kNN graph, and the CC kernel's edge
+      // materialization would otherwise recompute the banded join again
+      // (measured 12.4 s -> the graph is the dominant cost)
+      val g = knnGraph(s, d)
+      fill(g, "Similarity.ann_knn_components/g")
       val fwd = g.where(col("q_id") < col("cand_id"))
         .select(col("q_id").as("a"), col("cand_id").as("b"))
       val rev = g.where(col("q_id") > col("cand_id"))
@@ -1027,7 +1016,7 @@ object Similarity {
     // the 6-dp-rounded block minima as exact DECIMALs (the block rows
     // arrive via a groupBy, so a double fold would be order-dependent).
     "emb_quantize_pq_trained" -> { (s, d) =>
-      val blocks = pqBlocks(s, d).persist()
+      val blocks = persist(pqBlocks(s, d))
       pqTrainedCodes(blocks, pqTrain(blocks))
         .groupBy("vec_id")
         .agg(
@@ -1064,7 +1053,7 @@ object Similarity {
     // collapses the 8 block rows map-side, so the shuffle is one row per
     // (query, candidate) — the same volume every per-query ranking pays.
     "ann_pq_trained_topk" -> { (s, d) =>
-      val blocks = pqBlocks(s, d).persist()
+      val blocks = persist(pqBlocks(s, d))
       val cents = pqTrain(blocks)
       val codes = pqTrainedCodes(blocks, cents)
         .select(col("vec_id").as("cand_id"), col("b"), col("code"))
@@ -1231,15 +1220,15 @@ object Similarity {
       val dists = e.crossJoin(broadcast(cc))
         .withColumn("dist2",
           col("xx") - lit(2.0) * dot(col("x"), col("c")) + col("cc"))
-      // final-centroid cell assignment, then residual vs the OWN cell
-      val assigned = dists.groupBy("vec_id")
+      // final-centroid cell assignment (consumed by the residual build
+      // AND the code join), then residual vs the OWN cell
+      val assigned = persist(dists.groupBy("vec_id")
         .agg(min(struct(col("dist2"), col("cid"))).as("m"), first(col("x")).as("x"))
-        .select(col("vec_id"), col("m.cid").as("cell"), col("x"))
-        .persist() // consumed by the residual build AND the code join
+        .select(col("vec_id"), col("m.cid").as("cell"), col("x")))
       val res = assigned
         .join(broadcast(coarse.select(col("cid").as("cell"), col("c"))), "cell")
         .select(col("vec_id"), zip_with(col("x"), col("c"), (a, b) => a - b).as("x"))
-      val blocks = pqBlocksOf(res).persist()
+      val blocks = persist(pqBlocksOf(res))
       val pqc = pqTrain(blocks)
       val codes = pqTrainedCodes(blocks, pqc)
         .join(assigned.select("vec_id", "cell"), "vec_id")
@@ -1321,10 +1310,9 @@ object Similarity {
     // candidate (two long ops) instead of a 64-term float dot product.
     // Same broadcast-query/stream-corpus shape as ann_cosine_topk.
     "ann_hamming_topk" -> { (s, d) =>
-      val p = binaryBits(s, d).persist()
-      // eager fill (r13): the broadcast query subtree and the corpus
-      // probe otherwise race to compute the bit packing cold
-      p.count()
+      val p = binaryBits(s, d)
+      // the broadcast query subtree and the corpus probe
+      fill(p, "Similarity.ann_hamming_topk/p")
       val q = p.where(col("vec_id") < QuerySet)
         .select(col("vec_id").as("q_id"), col("bits_lo").as("qlo"),
           col("bits_hi").as("qhi"))

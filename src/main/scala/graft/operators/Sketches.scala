@@ -8,6 +8,7 @@ import org.apache.spark.sql.Column
 
 import org.apache.spark.sql.expressions.Window
 
+import graft.Graft.{fill, persist}
 import graft.Tables._
 import graft.functions.{BloomFilterAgg, CountMinSketchAgg, HistQuantileAgg, HyperLogLogAgg, MisraGriesAgg}
 import TextHash.{toksSql, toks}
@@ -378,17 +379,14 @@ object Sketches {
       // are still computed by a DIRECT pass over the token stream, not
       // by merging the per-source sketches (that is the property under
       // test).
-      val tokSrc = documents(s, d)
+      val tokSrc = persist(documents(s, d)
         .select(col("source"), explode(toks(col("text"))).as("tok"))
-        .distinct().persist()
+        .distinct())
       val cells = tokSrc.groupBy("source").agg(hll(col("tok")).as("regs"))
         .select(col("source"), posexplode(col("regs")).as(Seq("idx", "reg")))
-        .persist()
-      // eager fills (r13): stats/merged read cells and exact/global read
-      // tokSrc through independent stages of one job — cold, the
-      // tokenize+distinct pass ran once per consumer (filling cells also
-      // fills tokSrc transitively)
-      cells.count()
+      // stats/merged read cells and exact/global read tokSrc through
+      // independent stages of one job (filling cells also fills tokSrc)
+      fill(cells, "Sketches.hll_by_source_check/cells")
       val stats = cells.groupBy("source").agg(
         sum(when(col("reg") === 0, 1L).otherwise(0L)).as("n_zero"),
         sum(pow(lit(2.0), -col("reg").cast("double"))).as("s"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash._
 
@@ -125,11 +126,9 @@ object Substring {
     * prefixes short on a mostly-unique corpus.
     */
   def spanPairsLossless(docs: DataFrame, minShared: Long): DataFrame = {
-    val e = exactGramsOf(docs).select("doc_id", "h").distinct().persist()
-    // eager fill (r13 stage-parallel sweep): the df aggregate, the docT
-    // join probe and both verify sides scan e through independent
-    // stages — cold, each recomputed the gram explode + distinct
-    e.count()
+    val e = exactGramsOf(docs).select("doc_id", "h").distinct()
+    // the df aggregate, the docT join probe and both verify sides
+    fill(e, "Substring.spanPairsLossless/e")
     val dfs = e.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df") >= 2)
     val docT = e.join(dfs, "h")

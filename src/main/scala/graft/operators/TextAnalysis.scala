@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash._
 
@@ -343,10 +344,7 @@ object TextAnalysis {
             log(-log((pmod(h60(concat(lit("dsir"), col("doc_id").cast("string"))),
               lit(1000000L)).cast("double") + 0.5) / 1e6)), 6).as("gk"))
       val sel = gk.orderBy(col("gk").desc, col("doc_id")).limit(DsirSampleK)
-        .persist() // consumed by the per-lang counts AND the 1-row total
-      // eager fill (r13): the 1-row nSel broadcast job and the selByLang
-      // probe otherwise both run the corpus-sized Gumbel top-k cold
-      sel.count()
+      fill(sel, "TextAnalysis.dsir_resample_stats/sel") // the per-lang counts AND the 1-row total
       val selByLang = sel.groupBy("lang").agg(count(lit(1)).as("n_sel"))
       val nSel = sel.agg(count(lit(1)).as("k"))
       val corpus = documents(s, d).groupBy("lang")

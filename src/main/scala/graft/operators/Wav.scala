@@ -5,6 +5,7 @@ import java.io.IOException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash.h60Sql
 
@@ -248,19 +249,15 @@ object Audio {
   /** Banded energy-signature near-dup over ANY clip table — the
     * composable core of `mm_audio_dedup`, factored out so the scale
     * probe can drive long synthetic clips through the identical join
-    * shape. persist (not localCheckpoint): decoded once, both join sides
+    * shape. Filled (not localCheckpoint): decoded once, both join sides
     * read the cached blocks, and Graft.releaseCaches can actually free
-    * them after the query (checkpoint RDD blocks are invisible to
-    * cacheManager.clearCache and linger until GC).
+    * them after the query (checkpoint RDD blocks linger until GC).
     */
   def dedupPairsFor(clips: org.apache.spark.sql.Dataset[Multimodal.MediaRow])
       : DataFrame = {
     val st = decodeStats(clips).toDF()
       .select(col("media_id"), col("n_samples"), col("band_e"))
-      .persist()
-    // eager fill (r13): the self-join's two exchange map stages run
-    // concurrently — cold, each DECODES every clip again
-    st.count()
+    fill(st, "Wav.dedupPairsFor/st") // the self-join's two exchange map stages each decode
     val banded = st
       .select(col("media_id"), col("n_samples"),
         posexplode(col("band_e")).as(Seq("band", "e")))

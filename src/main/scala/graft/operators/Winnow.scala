@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft.fill
 import graft.Tables._
 import TextHash._
 
@@ -393,14 +394,12 @@ object Winnow {
       // [[fpBuckets]]) with the containment-specific df band (nd <=
       // FpDfCap keeps singleton buckets: they contribute to nf but no
       // pairs, exactly as the old row filter did).
-      // persist: buckets feed BOTH the pair expansion AND the per-doc nf
+      // buckets feed BOTH the pair expansion AND the per-doc nf
       // aggregate (the r10 plan audit measured the selection pipeline
-      // executing twice without this); the eager count fills the cold
-      // cache once before the nf/pair jobs race for it. Caller owns
-      // release (Graft.releaseCaches after the action).
+      // executing twice without the cache)
       val buckets = fpBuckets(documents(s, d).select("doc_id", "text"))
-        .where(size(col("ds")) <= FpDfCap.toInt).persist()
-      buckets.count()
+        .where(size(col("ds")) <= FpDfCap.toInt)
+      fill(buckets, "Winnow.wn_containment/buckets")
       // nf = distinct df-capped fingerprints per doc: explode of the
       // capped buckets (posting mass bounded by FpDfCap per row)
       val nf = buckets.select(explode(col("ds")).as("doc_id"))

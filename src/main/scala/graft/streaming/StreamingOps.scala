@@ -171,9 +171,7 @@ object StreamingOps {
                     outDir: String): Long = {
     graft.Graft.init(spark) // graft_h60 on any caller session
     gatedIngest(spark, srcDir, schema, checkpointDir, outDir) { batch =>
-      val (out, inSig) = graft.operators.Dedup.minhashMatchesReleasable(
-        batch.select("doc_id", "text"), refSigs)
-      (out, () => { inSig.unpersist(); () })
+      graft.operators.Dedup.minhashMatchesAgainst(batch.select("doc_id", "text"), refSigs)
     }
   }
 
@@ -185,30 +183,23 @@ object StreamingOps {
     * appending), and count survivors. The final read passes the KNOWN
     * `schema`: a gate that drops every document leaves only _SUCCESS
     * markers, and schema inference over that glob would throw instead of
-    * returning 0.
-    *
-    * The `hits` callback returns the doc_ids to drop PLUS a cleanup
-    * closure releasing exactly what the batch persisted: a blanket
-    * `Graft.releaseCaches` here would also evict the CALLER's long-lived
-    * reference index between micro-batches (measured by the r10 scale
-    * probe: the 100k-doc signature index silently rebuilt once per
-    * batch), while skipping cleanup would accumulate one batch-side
-    * cache per micro-batch for the life of the stream.
+    * returning 0. What `hits` persisted for a batch is released after
+    * the batch is written (Graft.releaseCaches, which leaves the caller's
+    * cached reference index alone).
     */
   private def gatedIngest(spark: SparkSession, srcDir: String,
                           schema: org.apache.spark.sql.types.StructType,
                           checkpointDir: String, outDir: String)
-                         (hits: DataFrame => (DataFrame, () => Unit)): Long = {
+                         (hits: DataFrame => DataFrame): Long = {
     val q = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (drop, cleanup) = hits(batch)
-        try batch.join(drop, Seq("doc_id"), "left_anti")
+        try batch.join(hits(batch), Seq("doc_id"), "left_anti")
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        finally cleanup()
+        finally graft.Graft.releaseCaches(spark)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -233,9 +224,8 @@ object StreamingOps {
                    outDir: String): Long = {
     graft.Graft.init(spark) // graft_h60 on any caller session
     gatedIngest(spark, srcDir, schema, checkpointDir, outDir) { batch =>
-      // winnowMatchesAgainst persists nothing batch-side — no cleanup
-      (graft.operators.Winnow.winnowMatchesAgainst(
-        batch.select("doc_id", "text"), refIdx, minShared), () => ())
+      graft.operators.Winnow.winnowMatchesAgainst(
+        batch.select("doc_id", "text"), refIdx, minShared)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.operators.Dedup
 
 /** Dedup pack over the sf0.001 fixtures: structural invariants plus a
@@ -160,7 +161,7 @@ class DedupSpec extends SparkSpecBase {
       (i.toLong, s"$boiler $tail")
     } :+ (9000L, s"$boiler dupmark") :+ (9001L, s"$boiler dupmark"))
       .toDF("doc_id", "text")
-    val e = Dedup.shingleIndex(docs).persist()
+    val e = Dedup.shingleIndex(docs).persist() // test-owned: unpersisted below
     val rawMax = e.groupBy("g").count().agg(max("count")).head().getLong(0)
     val prefMax = Dedup.prefixRows(e, 1, 2)
       .groupBy("g").count().agg(max("count")).head().getLong(0)
@@ -173,6 +174,7 @@ class DedupSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(prefix === uncapped)
     assert(prefix.contains((9000L, 9001L)))
+    e.unpersist()
     Graft.releaseCaches(spark)
   }
 
@@ -256,9 +258,12 @@ class DedupSpec extends SparkSpecBase {
     Dedup.queries("dedup_minhash_pairs")(spark, sfDir).count()
     Dedup.queries("dedup_ngram_jaccard")(spark, sfDir).count()
     assert(!spark.sharedState.cacheManager.isEmpty, "operators should persist intermediates")
+    val owned = Graft.registered(spark)
+    assert(owned.nonEmpty, "operators should register what they persist")
     Graft.releaseCaches(spark)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "caller-owned release must leave a clean session")
+    // other suites' own caches may rightly survive; graft's may not
+    assert(owned.forall(_.storageLevel == StorageLevel.NONE),
+      "caller-owned release must leave no graft-registered plan cached")
   }
 
   test("dedup_embedding_cosine output is a<b ordered with cos in [-1,1]") {

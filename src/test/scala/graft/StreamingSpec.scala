@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.storage.StorageLevel
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Click
@@ -242,7 +243,8 @@ class StreamingSpec extends SparkSpecBase {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val allIds = docs.collect().map(_.getLong(0)).toSet
     val ref = docs.where(col("doc_id") % 5 === 0)
-    val refSigs = Dedup.signatureIndex(ref)
+    // caller-owned cache: graft's per-batch release must leave it alone
+    val refSigs = Dedup.signatureIndex(ref).persist()
     // batch ground truth: signatures depend only on each doc's own text,
     // so micro-batch boundaries cannot change the match set
     val dropped = Dedup.minhashMatchesAgainst(docs, refSigs)
@@ -255,6 +257,9 @@ class StreamingSpec extends SparkSpecBase {
     docs.repartition(3).write.parquet(s"$tmp/src")
     val n = StreamingOps.nearDupIngest(spark, s"$tmp/src", docs.schema,
       refSigs, s"$tmp/ck", s"$tmp/out")
+    assert(refSigs.storageLevel != StorageLevel.NONE,
+      "the caller's reference index must still be cached after every batch")
+    refSigs.unpersist()
     val survivors = spark.read.parquet(s"$tmp/out/batch=*")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == (allIds -- dropped),
