@@ -66,12 +66,14 @@ object Bench {
     // Iterative-kernel warm-up: the first CC/PPR-style loop in a cold JVM
     // pays ~10-17 s of codegen + localCheckpoint infrastructure that used
     // to land on whichever component query ran first alphabetically. A
-    // 2-round tiny CC compiles those code paths untimed.
+    // tiny CC forced through the round loop (connectedComponents itself
+    // would label so small a graph on the driver) compiles those code
+    // paths untimed.
     locally {
       import org.apache.spark.sql.functions.col
       val n = spark.range(0, 8).select(col("id"))
       val e = spark.range(0, 6).select(col("id").as("a"), (col("id") + 1).as("b"))
-      graft.operators.Components.connectedComponents(n, e).count()
+      graft.operators.Components.connectedComponentsRounds(n, e).count()
       Graft.releaseCaches(spark)
     }
     // Deterministic (sorted) order for round-over-round comparability.

@@ -223,7 +223,10 @@ object Graft {
   /** Rows of iteration state per shuffle partition under
     * [[withIterShufflePartitions]] — sized so a fixture-scale subgraph
     * collapses to the 4-partition floor while any real shard keeps the
-    * session's full parallelism.
+    * session's full parallelism. [[operators.Components.connectedComponents]]
+    * uses the same size as its kernel switch: an undirected edge relation
+    * of fewer rows is collected and labelled by a union-find on the
+    * driver instead of running the distributed round loop.
     */
   val IterRowsPerPartition = 50000L
 

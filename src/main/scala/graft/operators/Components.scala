@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 
-import graft.Graft.{fill, persist}
+import graft.Graft.{fill, persist, IterRowsPerPartition}
 import graft.Tables._
 
 /** Cluster formation over the near-dup pair graph — the step a real dedup
@@ -15,7 +17,15 @@ import graft.Tables._
   * reference has nothing in this category (SURVEY.md §2.5); this is a
   * north-star extension.
   *
-  * Algorithm: iterative min-label propagation with pointer jumping.
+  * The kernel is chosen from the size of the undirected edge relation,
+  * which is counted anyway when it is materialized. Below
+  * [[graft.Graft.IterRowsPerPartition]] rows the edges are collected in one
+  * job and a path-compressed union-find labels them on the driver: a small
+  * subgraph would otherwise pay ~3 single-stage jobs per round, each one
+  * dominated by launch latency, not data. Larger subgraphs run the
+  * distributed round loop, which never moves edges to the driver.
+  *
+  * Round loop: iterative min-label propagation with pointer jumping.
   * Each round does
   *
   *   1. propagate:  L(v) := min(L(v), min over neighbors u of L(u))
@@ -30,21 +40,16 @@ import graft.Tables._
   * travelled per round, giving O(log n) rounds on any topology — the same
   * bound as the large-star/small-star algorithm (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SOCC'14) with a simpler per-round
-  * plan. Per round: two shuffles on node id, both map-side combined, no
-  * driver-side data (convergence is detected from a 1-row sum aggregate —
-  * labels only ever decrease, so the label-sum is strictly monotone until
+  * plan. Per round: two shuffles on node id, both map-side combined; the
+  * driver sees only a 1-row aggregate (convergence is detected from the
+  * label sum — labels only ever decrease, so it is strictly monotone until
   * the fixpoint).
   *
-  * The intermediate label table is persisted each round and the previous
-  * one released — at 100 TB each round's labels are (id, cc) pairs only,
+  * Each round's label table is `localCheckpoint`ed, which truncates its
+  * lineage — at 100 TB each round's labels are (id, cc) pairs only,
   * orders of magnitude smaller than the documents they index.
   */
 object Components {
-
-  /** Round count of the most recent [[connectedComponents]] convergence —
-    * diagnostic only (profiling mains / specs read it after a run).
-    */
-  @volatile private[graft] var lastRounds: Int = 0
 
   /** Connected components of an undirected graph.
     *
@@ -52,15 +57,34 @@ object Components {
     * @param edges two-column DataFrame of undirected edges; endpoints
     *              should be node ids (extra endpoints join in as nodes)
     * @return (id, cc) — cc is the minimum node id of the component,
-    *         deterministic regardless of round count or partitioning
+    *         deterministic regardless of kernel, round count or
+    *         partitioning
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxRounds: Int = 50): DataFrame = {
+                          maxRounds: Int = 50): DataFrame =
+    components(nodes, edges, maxRounds, driverBelow = IterRowsPerPartition)
+
+  /** [[connectedComponents]] with the round loop at every size: the only
+    * kernel for a graph too big for the driver, and the reference the
+    * specs hold the driver-side path to.
+    */
+  private[graft] def connectedComponentsRounds(nodes: DataFrame,
+      edges: DataFrame, maxRounds: Int = 50): DataFrame =
+    components(nodes, edges, maxRounds, driverBelow = 0L)
+
+  /** Both kernels: the driver-side one when the undirected edge relation
+    * has fewer than `driverBelow` rows, the round loop otherwise.
+    */
+  private def components(nodes: DataFrame, edges: DataFrame, maxRounds: Int,
+                         driverBelow: Long): DataFrame = {
     // checkpoint the edge input before mirroring it: the union's plan
     // contains the edge subtree TWICE, so an expensive source (the minhash
     // pair graph) would be computed twice inside und's one materialization
     val e = edges.toDF("src", "dst").localCheckpoint()
     val und = persist(e.union(e.select(col("dst"), col("src"))))
+    // the one materialization of und both kernels reuse; its row count
+    // picks the kernel and sizes the round loop's shuffles
+    val undRows = fill(und, "Components.connectedComponents/und")
     // Singleton fast-path: a node touching no edge keeps cc = id forever,
     // so ONLY edge endpoints enter the iteration. Near-dup graphs are
     // sparse — at corpus scale the endpoint set is orders of magnitude
@@ -68,10 +92,64 @@ object Components {
     // corpus-sized to subgraph-sized. Singletons are unioned back at the
     // end. (und carries both directions, so src alone covers every
     // endpoint; endpoints outside `nodes` join in as nodes — docstring
-    // contract.)
-    val endpoints = persist(und.select(col("src").as("id")).distinct())
+    // contract.) The driver-side labels already list every endpoint, so
+    // that kernel skips the distinct over und and its fill jobs.
+    val (labels, endpoints) =
+      if (undRows < driverBelow) {
+        val l = unionFindLabels(und)
+        (l, l.select(col("id")))
+      } else {
+        val endpoints = persist(und.select(col("src").as("id")).distinct())
+        (roundLabels(und, endpoints, undRows, maxRounds), endpoints)
+      }
     val singletons = nodes.toDF("id").join(endpoints, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cc"))
+    // materialize the result WHILE und/endpoints are still cached —
+    // otherwise the singleton anti-join re-derives the whole edge lineage
+    // (for the near-dup graph: a full minhash recompute) at consumption
+    val out = labels.union(singletons).localCheckpoint()
+    und.unpersist()
+    endpoints.unpersist()
+    labels.unpersist()
+    out
+  }
+
+  /** Driver-side kernel: collects `und` and runs a path-compressed
+    * union-find, rooting each component at its minimum id. Same rows and
+    * schema as [[roundLabels]], NULLs included: a NULL endpoint links
+    * nothing and takes the least label among its non-NULL neighbors
+    * (no row when it has none).
+    */
+  private def unionFindLabels(und: DataFrame): DataFrame = {
+    val rows = und.collect()
+    // ids sorted ascending, so a smaller index is a smaller id
+    val ids = rows.iterator.map(_.get(0)).filter(_ != null).distinct.toArray
+      .sortWith(_.asInstanceOf[Comparable[Any]].compareTo(_) < 0)
+    val index = ids.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    def at(r: Row, i: Int): Option[Int] = Option(r.get(i)).map(index)
+    rows.foreach { r =>
+      for (a <- at(r, 0).map(find); b <- at(r, 1).map(find) if a != b)
+        parent(math.max(a, b)) = math.min(a, b)
+    }
+    val nullLabel = rows.filter(_.isNullAt(0)).flatMap(at(_, 1)).map(find)
+      .minOption.map(j => Row(null, ids(j)))
+    val labels = ids.indices.map(i => Row(ids(i), ids(find(i)))) ++ nullLabel
+    val src = und.schema("src")
+    und.sparkSession.createDataFrame(labels.asJava, StructType(Seq(
+      src.copy(name = "id"), StructField("cc", src.dataType, nullable = true))))
+  }
+
+  /** Distributed kernel: the min-label + pointer-jump round loop. */
+  private def roundLabels(und: DataFrame, endpoints: DataFrame,
+                          undRows: Long, maxRounds: Int): DataFrame = {
     var labels = persist(endpoints.select(col("id"), col("id").as("cc")))
     // Convergence metric: exact (row count, decimal label sum). The node set
     // is fixed after initialization and labels only ever decrease, so the
@@ -81,13 +159,10 @@ object Components {
       val r = df.agg(count(lit(1)), sum(col("cc").cast(DecimalType(38, 0)))).head
       (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)))
     }
-    // size the per-round shuffles to the SUBGRAPH (the count is also the
-    // one materialization of und every round reuses); see
-    // Graft.withIterShufflePartitions for why AQE can't do this here
-    val undRows = fill(und, "Components.connectedComponents/und")
-    // the lowered-partition scope covers ONLY the subgraph-sized loop; the
-    // node-sized singleton anti-join below runs at session parallelism
-    labels = graft.Graft.withIterShufflePartitions(nodes.sparkSession, undRows) {
+    // size the per-round shuffles to the SUBGRAPH; see
+    // Graft.withIterShufflePartitions for why AQE can't do this here.
+    // The node-sized singleton anti-join runs at session parallelism.
+    graft.Graft.withIterShufflePartitions(und.sparkSession, undRows) {
     var prev = state(labels)
     var converged = false
     var rounds = 0
@@ -117,17 +192,8 @@ object Components {
       rounds += 1
     }
     require(converged, s"connectedComponents: not converged after $maxRounds rounds")
-    lastRounds = rounds
     labels
     } // withIterShufflePartitions
-    // materialize the result WHILE und/endpoints are still cached —
-    // otherwise the singleton anti-join re-derives the whole edge lineage
-    // (for the near-dup graph: a full minhash recompute) at consumption
-    val out = labels.union(singletons).localCheckpoint()
-    und.unpersist()
-    endpoints.unpersist()
-    labels.unpersist()
-    out
   }
 
   /** (doc_id, component_id) over the minhash near-dup graph — doc ids

@@ -1,20 +1,48 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.LongType
 import graft.operators.{Components, Dedup}
 
-/** Connected components: known graphs, a seeded random-graph property
-  * against a brute-force union-find, the deep-path case that would defeat
-  * plain min-label propagation (proving the pointer-jump round bound), and
+/** Connected components: known graphs and a seeded random-graph property
+  * against a brute-force union-find, each run through the public entry
+  * (which labels these small graphs on the driver) and through the
+  * distributed round loop; parity of the two kernels on schema, foreign
+  * endpoints and NULL endpoints; the deep-path case that would defeat
+  * plain min-label propagation (proving the pointer-jump round bound); and
   * the fixture-level invariants of the oracled queries.
   */
 class ComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)],
+  private type Kernel = (DataFrame, DataFrame, Int) => DataFrame
+  private val public: Kernel = Components.connectedComponents(_, _, _)
+  private val rounds: Kernel = Components.connectedComponentsRounds(_, _, _)
+  private val kernels = Seq("connectedComponents" -> public, "round loop" -> rounds)
+
+  private def cc(kernel: Kernel, nodes: Seq[Long], edges: Seq[(Long, Long)],
                  maxRounds: Int = 50): Map[Long, Long] =
-    Components.connectedComponents(
-      nodes.toDF("id"), edges.toDF("src", "dst"), maxRounds)
+    kernel(nodes.toDF("id"), edges.toDF("src", "dst"), maxRounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Rows of `df` as (id, cc) options, sorted: NULL-safe and order-free. */
+  private def rowsOf(df: DataFrame): Seq[(Option[Long], Option[Long])] = {
+    def at(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getAs[Number](i).longValue)
+    df.collect().toSeq.map(r => (at(r, 0), at(r, 1))).sorted
+  }
+
+  private def asRows(labels: Map[Long, Long]): Seq[(Option[Long], Option[Long])] =
+    labels.toSeq.map { case (v, c) => (Option(v), Option(c)) }.sorted
+
+  /** Both kernels on the same inputs: identical schema and rows. Returns
+    * the public entry's result.
+    */
+  private def assertParity(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val (a, b) = (public(nodes, edges, 50), rounds(nodes, edges, 50))
+    assert(a.schema === b.schema)
+    assert(rowsOf(a) === rowsOf(b))
+    a
+  }
 
   /** Reference implementation: path-compressed union-find. */
   private def bruteCc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -36,13 +64,19 @@ class ComponentsSpec extends SparkSpecBase {
   }
 
   test("known graph: chain + pair + isolated node") {
-    val got = cc(Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq((1L, 2L), (2L, 3L), (5L, 6L)))
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
+    kernels.foreach { case (name, k) =>
+      val got = cc(k, Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq((1L, 2L), (2L, 3L), (5L, 6L)))
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L), name)
+      assert(got === bruteCc(1L to 6L, Seq((1L, 2L), (2L, 3L), (5L, 6L))), name)
+    }
   }
 
   test("empty edge set: every node is its own component") {
-    val got = cc(Seq(10L, 20L, 30L), Seq.empty)
-    assert(got === Map(10L -> 10L, 20L -> 20L, 30L -> 30L))
+    kernels.foreach { case (name, k) =>
+      val got = cc(k, Seq(10L, 20L, 30L), Seq.empty)
+      assert(got === Map(10L -> 10L, 20L -> 20L, 30L -> 30L), name)
+      assert(got === bruteCc(Seq(10L, 20L, 30L), Seq.empty), name)
+    }
   }
 
   test("deep path (64 nodes) converges within the O(log n) round budget") {
@@ -50,7 +84,7 @@ class ComponentsSpec extends SparkSpecBase {
     val edges = (1L until 64L).map(v => (v, v + 1))
     // plain min-propagation would need 63 rounds; pointer jumping must land
     // well under the 12-round cap (2*log2(64) = 12)
-    val got = cc(nodes, edges, maxRounds = 12)
+    val got = cc(rounds, nodes, edges, maxRounds = 12)
     assert(got === nodes.map(_ -> 1L).toMap)
   }
 
@@ -62,8 +96,34 @@ class ComponentsSpec extends SparkSpecBase {
       val edges = List.fill(rng.nextInt(31)) {
         (1L + rng.nextInt(n), 1L + rng.nextInt(n))
       }.filter { case (a, b) => a != b }
-      assert(cc(nodes, edges) === bruteCc(nodes, edges))
+      kernels.foreach { case (name, k) =>
+        assert(cc(k, nodes, edges) === bruteCc(nodes, edges), name)
+      }
     }
+  }
+
+  test("kernel parity: an edge endpoint absent from nodes joins in as a node") {
+    val edges = Seq((2L, 9L), (9L, 12L), (20L, 21L))
+    val got = assertParity(Seq(1L, 2L, 3L).toDF("id"), edges.toDF("src", "dst"))
+    assert(rowsOf(got) === asRows(bruteCc(Seq(1L, 2L, 3L, 9L, 12L, 20L, 21L), edges)))
+  }
+
+  test("kernel parity: Int edges with Long nodes give the same schema and rows") {
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
+    val edges = Seq((1, 2), (2, 3), (7, 5)).toDF("src", "dst")
+    val got = assertParity(nodes, edges)
+    assert(got.schema.map(_.dataType) === Seq(LongType, LongType))
+    assert(rowsOf(got) === asRows(Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 7L -> 5L)))
+  }
+
+  test("kernel parity: a NULL edge endpoint links nothing") {
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id")
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), None), (None, Some(5L)), (None, None),
+      (Some(5L), Some(6L))).toDF("src", "dst")
+    val rows = rowsOf(assertParity(nodes, edges))
+    // the non-NULL rows are the components of the non-NULL edges alone
+    assert(rows.filter(_._1.nonEmpty) === asRows(bruteCc(1L to 6L, Seq((1L, 2L), (5L, 6L)))))
   }
 
   test("dedup_components: every minhash pair is intra-component; labels are component minima") {
