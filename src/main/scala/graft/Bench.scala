@@ -16,24 +16,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // STATIC conf (must be set before the first session): the JVM-wide
-      // generated-class cache defaults to 100 entries, but the fleet
-      // compiles ~2,300+ whole-stage/projection fragments — the warm
-      // pass's compilations were ALL evicted long before their timed
-      // run, so every timed query re-ran tens of Janino compiles
-      // (~25 ms each) inside the timed region. 8192 entries actually
-      // holds the fleet, making the warm pass's documented intent ("what
-      // is warm is the JVM-wide generated-class cache") true. This does
-      // not skip any computation — compiled classes are engine
-      // infrastructure, not data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
+    // the session's core count: the spinner gang's width and the
+    // post-warm shuffle-partition reset below
+    val cpus = spark.sparkContext.defaultParallelism
     // Warm-up (untimed): first-action classloading, whole-stage-codegen
     // compilation, parquet footer reads and OS page cache would otherwise
     // be charged to whichever query happens to touch each table first
@@ -41,15 +27,15 @@ object Bench {
     // fixture table once and exercise the common physical shapes (agg,
     // window, join, custom expressions) so the timed loop measures plans,
     // not infrastructure.
-    Graft.init(spark)
-    // ambient load BEFORE any of our own work: the quiesce below waits
-    // for the 1-min average to decay back toward this, not toward an
-    // unreachable zero on a shared box
-    def loadavg1(): Double =
+    // 1-min loadavg, sampled once BEFORE any of our own work (the quiesce
+    // below waits for the average to decay back toward this ambient, not
+    // toward an unreachable zero on a shared box) and after each timed
+    // query, so a reader can separate contention from regressions
+    def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    val ambientLoad = loadavg1()
+    val ambientLoad = loadavg()
     spark.range(1000).selectExpr("sum(id)").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
@@ -81,14 +67,8 @@ object Bench {
     // Catalyst prune the computed columns and the sort, timing only the
     // scan for map-only queries.
     var failed = List.empty[String]
-    // Local-iteration filter (mirrors Verify): SPARK_GRAFT_ONLY="a,b"
-    // times only those queries. Unset for the driver's full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    // SPARK_GRAFT_ONLY="a,b" times only those queries
+    val selected = SparkEntry.only(SparkEntry.queries)
     // Codegen warm pass (untimed): run every selected query once at a
     // ~100x smaller scale factor. Whole-stage-codegen source depends on
     // the PLAN (schema + operators), not on the input path or size, so
@@ -115,7 +95,7 @@ object Bench {
       // tiny; the timed loop's no-cross-query-cache invariant is
       // guaranteed by this trailing release plus the per-query releases
       // below).
-      val warmWidth = sys.env.getOrElse("SPARK_GRAFT_WARM_WIDTH", "8").toInt
+      val warmWidth = 8
       val pool = java.util.concurrent.Executors.newFixedThreadPool(warmWidth)
       val work = new java.util.concurrent.ConcurrentLinkedQueue[
         (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
@@ -204,7 +184,7 @@ object Bench {
       }
       // belt-and-suspenders: assert the timed session's confs are what
       // the builder set, whatever the warm pass did
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
       spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
       // Post-warm QUIESCE (untimed, bounded): the warm pool leaves an
       // echo — JIT C2 backlog, ContextCleaner/BlockManager async cleanup
@@ -226,20 +206,12 @@ object Bench {
         System.gc()
         val target = math.max(4.0, ambientLoad + 1.0)
         val t0 = System.currentTimeMillis()
-        while (System.currentTimeMillis() - t0 < quiesceMs && loadavg1() > target)
+        while (System.currentTimeMillis() - t0 < quiesceMs && loadavg() > target)
           Thread.sleep(1000)
         System.err.println(s"[bench] quiesce: ${System.currentTimeMillis() - t0} ms, " +
-          s"ambient=$ambientLoad load=${loadavg1()}")
+          s"ambient=$ambientLoad load=${loadavg()}")
       }
     }
-    // ambient container load self-attribution: this box runs other tenants,
-    // and load 3-4 has inflated random queries 3-10x in past rounds. A
-    // 1-min loadavg sample after each query (plus one before the run) lets
-    // a reader separate contention from regressions without a re-probe.
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     // ---- contention CALIBRATION probes (r11 verdict #1b): every stored
     // r11 window carried an external co-tenant, and the 1-min loadavg is
     // a poor inflation proxy on a 32-core box (load 4 of 32 cores should
@@ -283,10 +255,9 @@ object Bench {
     // gang finishes in one quantum; with k cores taken, ~k threads queue
     // behind the co-tenant and the wall stretches by the same factor the
     // wide stages feel.
-    val nGang = cpus.toInt
     def parOnce(): Double = {
       val t0 = System.nanoTime()
-      val ths = (1 to nGang).map { k =>
+      val ths = (1 to cpus).map { k =>
         val t = new Thread(new Runnable {
           def run(): Unit = {
             var x = (k.toLong << 1) | 1L; var i = 0

@@ -20,9 +20,8 @@ import org.apache.spark.sql.execution.debug.codegenStringSeq
   * names the queries whose stages exceed the JIT window — so wide-unroll
   * plans are restructured (or accepted) deliberately, never silently.
   *
-  * Per-query output: `AUDIT <name> stages=<n> max_method=<bytecodes>
-  * over_jit=<n>`; summary lists every over-limit query. Results recorded
-  * in BASELINE.md; BytecodeAuditSpec enforces the whitelist in the suite.
+  * `graft.Tool bytecode` prints the fleet report; results recorded in
+  * BASELINE.md; BytecodeAuditSpec enforces the whitelist in the suite.
   */
 object BytecodeAudit {
   /** HotSpot's DontCompileHugeMethods default: the bytecode size above
@@ -68,30 +67,5 @@ object BytecodeAudit {
       (n, stages.size, if (sizes.isEmpty) 0 else sizes.max,
         sizes.count(_ > JitLimit))
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-bytecode-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Graft.init(spark)
-
-    val rows = audit(spark, d, SparkEntry.queries.keys.toSeq.sorted)
-    rows.foreach { case (n, st, mx, over) =>
-      println(s"AUDIT $n stages=$st max_method=$mx over_jit=$over")
-    }
-    val offenders = rows.filter(_._4 > 0)
-    println(s"SUMMARY queries=${rows.size} " +
-      s"stages=${rows.map(_._2).sum} over_jit_queries=${offenders.size}")
-    offenders.foreach { case (n, _, mx, over) =>
-      println(s"OVER $n max_method=$mx stages_over=$over")
-    }
-    spark.stop()
   }
 }

@@ -271,25 +271,30 @@ object Graft {
   /** Codegen'd sequential-fold dot product (requires `init(spark)` first). */
   def graft_dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Recommended session for this engine at scale. `local[cores]` here; on
-    * a cluster, keep every config and swap the master. The shuffle
-    * partition count should track total executor cores (AQE coalesces
-    * down, so err high); maxPartitionBytes sizes scan tasks so a 100 TB
-    * input yields ~800k tasks rather than a handful of giant ones.
+  /** The session every graft main runs on:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UI off, UTC (the events loader's timestamps depend on
+    * it), WARN logging, and `init` applied. Returns the JVM's existing
+    * session if one was already built.
     */
-  def recommendedSession(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")                    // default, pinned
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "128m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.session.timeZone", "UTC")
+      // STATIC conf (must be set before the first session): the JVM-wide
+      // generated-class cache defaults to 100 entries, but the fleet
+      // compiles ~2,300+ whole-stage/projection fragments — a warm pass's
+      // compilations were ALL evicted long before their timed run, so
+      // every timed query re-ran tens of Janino compiles (~25 ms each)
+      // inside the timed region. 8192 entries holds the fleet. This does
+      // not skip any computation — compiled classes are engine
+      // infrastructure, not data or results.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
     init(s)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe: regenerate the documents/embeddings fixtures at a
@@ -16,20 +15,14 @@ import org.apache.spark.sql.functions._
   * 20x, and the winnow multi-chunk path only ever executes on docs longer
   * than 2^20 chars — which no driver fixture contains.
   *
-  * Usage: runMain graft.ScaleProbe [multiplier] [workDir]
+  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.ScaleProbe [multiplier] [workDir]
   * Results land in SCALEPROBE.md (referenced from BASELINE.md).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(20)
     val work = if (args.length > 1) args(1) else "/tmp/graft_scaleprobe"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.init(spark)
+    val spark = Graft.session()
 
     val nDocs = 5000L * mult
     val nVec = 2000L * mult

@@ -1,26 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke main: drives the flagship `entry` plus the SQL surface of the
   * registered functions — the fast end-to-end check used between rounds.
   * Usage: sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.session()
 
     val e = SparkEntry.entry(spark)
     e.show(5, false)
     println("ENTRY_ROWS=" + e.count())
 
-    Graft.init(spark)
     // Reference-parity edge cases through the SQL surface (SURVEY.md §2.2):
     // invalid regex / out-of-range group -> "", NULL -> NULL — built-in throws.
     spark.sql(

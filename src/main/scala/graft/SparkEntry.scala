@@ -44,6 +44,19 @@ object SparkEntry {
       (s: SparkSession, d: String) => f(Graft.init(s), d)
     }.toMap
 
+  /** Names from a comma-separated list ("a, b,c"). */
+  def names(csv: String): Seq[String] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** `all` (`queries` or `oracleSql`) limited to the names listed in
+    * SPARK_GRAFT_ONLY, the local-iteration filter of Bench and Verify;
+    * all of it when that is unset (a full run).
+    */
+  def only[V](all: Map[String, V]): Map[String, V] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(all) { csv =>
+      all.view.filterKeys(names(csv).toSet).toMap
+    }
+
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     RegexpQueries.queries ++ Relational.queries ++ TpchSuite.queries ++
       Dedup.queries ++ Similarity.queries ++ TextAnalysis.queries ++

@@ -551,7 +551,7 @@ object RewriteMaxSelfJoin extends Rule[LogicalPlan] with PredicateHelper {
 
 /** SparkSessionExtensions entry point:
   *
-  *   SparkSession.builder()
+  *   builder                                  // a SparkSession.Builder
   *     .withExtensions(new GraftExtensions)   // or
   *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   *

@@ -54,9 +54,13 @@ import org.apache.spark.sql.internal.SQLConf
   * TakeOrderedAndProject's job), k bounded by spark.graft.groupTopK.maxK
   * (the per-key heap is memory), kill switch spark.graft.groupTopK.enabled.
   *
-  * Codegen-boundary audit (round 6, CodegenAudit at sf0.1, warm-JVM
-  * 3-run medians): the Partial/Final execs run `mapPartitions` over
-  * InternalRow, breaking whole-stage codegen at their boundary.
+  * Codegen-boundary audit (round 6 at sf0.1, warm-JVM 3-run medians,
+  * while q_topk_per_segment still ranked with row_number; it now uses
+  * rank() and keeps the window path, so an A/B today needs a row_number
+  * consumer, e.g. `graft.Tool time q_min_price_per_part
+  * --conf spark.graft.groupTopK.enabled=false`): the Partial/Final execs
+  * run `mapPartitions` over InternalRow, breaking whole-stage codegen at
+  * their boundary.
   * q_topk_per_segment measures operator 0.35-0.37 s vs kill-switched
   * window 0.29-0.30 s — the break + per-row iterator cost ~60-70 ms and
   * the shuffle-volume savings are invisible at local[32], where the

@@ -56,9 +56,11 @@ import org.apache.spark.sql.internal.SQLConf
   * to be a superset of each key's true extreme rows. Kill switch
   * `spark.graft.maxPerKey.enabled` restores the window execution.
   *
-  * Codegen-boundary audit (round 6, CodegenAudit at sf0.1, warm-JVM
-  * 3-run medians): q_max_join_elim runs 0.36-0.37 s through this
-  * operator vs 0.58-0.64 s kill-switched to the window path — the
+  * Codegen-boundary audit (round 6 at sf0.1, warm-JVM 3-run medians;
+  * rerun with `graft.Tool time q_max_join_elim
+  * --conf spark.graft.maxPerKey.enabled=false`): q_max_join_elim runs
+  * 0.36-0.37 s through this operator vs 0.58-0.64 s kill-switched to the
+  * window path — the
   * mapPartitions codegen break is already subsumed by the single-scan +
   * tie-pruned-shuffle win even at local[32], and the margin widens in
   * any network-bound regime. CodegenSupport not implemented; see the

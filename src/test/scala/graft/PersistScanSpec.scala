@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan: operators and streaming code persist shared intermediates
+/** Source scans. Operators and streaming code persist shared intermediates
   * only through Graft.persist / Graft.fill, so that Graft.releaseCaches
   * knows everything graft cached. A direct `.persist(` or `.cache()` there
   * would be invisible to it and would linger in the caller's session.
+  * And every main builds its session through Graft.session, so session
+  * config lives in one place.
   */
 class PersistScanSpec extends AnyFunSuite {
 
@@ -34,5 +36,15 @@ class PersistScanSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty,
       "persist through graft.Graft.persist / fill instead:\n" + hits.mkString("\n"))
+  }
+
+  test("SparkSession.builder appears under src/main only in Graft.session") {
+    val hits = for {
+      f <- scalaFiles("src/main/scala/graft")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield (f.getFileName.toString, s"$f:${i + 1}: ${line.trim}")
+    assert(hits.map(_._1) == Seq("Graft.scala"),
+      "build sessions with graft.Graft.session instead:\n" + hits.map(_._2).mkString("\n"))
   }
 }
